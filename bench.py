@@ -52,8 +52,8 @@ HEADLINE = [
     "q_bm25",
     "q_curation_full",
     "q_token_budget_sample",
-    # round-4 session-2 lanes: bloom-prefilter decontamination (map-
-    # only corpus pass) and MMR diversity re-ranking
+    # round-4 session-2 lanes: exact gram-join decontamination and
+    # MMR diversity re-ranking
     "q_decontaminate_bloom",
     "q_mmr_diverse",
     # round-4 session-3 lanes: DSIR importance selection, drift

@@ -4,9 +4,10 @@ that share at least ``min_shared`` distinct word n-grams with any
 benchmark/eval document.
 
 Same machinery as the dedup lane (shingle sets + equi-join on the
-shingle), with the benchmark side BROADCAST — eval sets are tiny
-relative to the corpus, so contamination checking is a map-side join
-over the training scan: no corpus shuffle at any scale.
+shingle). The join carries no broadcast hint: the benchmark side grows
+with the data, so size stats and AQE pick the strategy — a broadcast
+while the benchmark's grams fit under autoBroadcastJoinThreshold, a
+sort-merge join past it.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def find_contaminated(docs: DataFrame, benchmark: DataFrame, *,
         F.col(bench_id_col), F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("g")
     )
     return (
-        doc_grams.join(F.broadcast(bench_grams), "g")
+        doc_grams.join(bench_grams, "g")
         .groupBy(id_col, bench_id_col)
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)

@@ -322,7 +322,8 @@ def _triangle_census(pairs):
     # sets of per-row allocation churn — whereas this wedge join IS
     # the same intersection evaluated against two GLOBAL broadcast
     # hash relations built once per stage. Rejected per guide §1.1
-    # (the "ideal" plan's gotcha); evidence in OPTIMIZATION_r16.md.
+    # (the "ideal" plan's gotcha); these timings are recorded in
+    # VERDICT.md, round 16, item 3.
     odp = od.select(
         "src",
         (F.shiftleft(F.col("dd"), 32) + F.col("dst")).alias("p"),

@@ -315,12 +315,9 @@ DRIVER_RECHECK: dict[str, int] = {
     "q_ngram_dup_rate": 15,
     "q_dedup_substring": 15,
     "q_dedup_substring_strip": 15,
-    # r15 OPTIMIZATION: bloom prefilter hashes token SLICES (no gram
-    # strings JVM-side, both build and probe through one definition)
-    # and the probe kernel blocks its temporaries (64Ki grams/block).
-    # Same-day re-proof: verify_driver green at sf0.01 + sf0.1,
-    # test_bloom.py suite green (incl. bloom ≡ exact decontaminate).
-    "q_decontaminate_bloom": 15,
+    # Bloom prefilter deleted; both keys run the unhinted exact gram join.
+    "q_decontaminate_bloom": 17,
+    "q_contamination": 17,
 }
 
 # Deliberate re-proof set (r7 verdict #1): breadth is saturated, so

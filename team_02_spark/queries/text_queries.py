@@ -674,8 +674,9 @@ _CONTAM_CTES_SQL = """
 def q_contamination(spark, sf_dir):
     """Data-hygiene lane: benchmark contamination — every (training
     doc, benchmark item) pair sharing >= 5 distinct 3-grams. The
-    benchmark side (every 100th doc here) is broadcast; the corpus
-    never shuffles."""
+    benchmark side (every 100th doc here) scales with the corpus, so
+    the join carries no hint; size stats pick a broadcast at these
+    scales and the corpus never shuffles."""
     from team_02_spark.operators.contamination import find_contaminated
 
     docs = t(spark, sf_dir, "documents")
@@ -700,20 +701,18 @@ def q_contamination(spark, sf_dir):
     """,
 )
 def q_decontaminate_bloom(spark, sf_dir):
-    """Hygiene lane, 100 TB shape: EXACT decontamination via a
-    Bloom-filter prefilter (operators/bloom.py). The benchmark's
-    distinct 3-grams become a broadcast bit array; one map-only Arrow
-    pass counts per-doc bloom hits (no explode shuffle for clean
-    docs); only bloom candidates reach the exact gram-join verify.
-    No false negatives in a Bloom filter ⇒ survivors equal the exact
-    anti-join answer, checked here against the all-docs oracle."""
-    from team_02_spark.operators.bloom import decontaminate_bloom
+    """Hygiene lane: the training corpus with every contaminated
+    document removed — the exact gram join of q_contamination, then an
+    anti-join on the flagged ids. The key keeps its historical name; a
+    Bloom prefilter once ran ahead of the join and measured slower
+    than the join alone."""
+    from team_02_spark.operators.contamination import decontaminate
 
     docs = t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    return decontaminate_bloom(docs, bench, min_shared=5).select("doc_id")
+    return decontaminate(docs, bench, min_shared=5).select("doc_id")
 
 
 @query(
@@ -1902,7 +1901,7 @@ def q_dedup_substring(spark, sf_dir):
 def q_cms_topk(spark, sf_dir):
     """Count-min heavy hitters over the corpus token stream — the
     frequency member of the mergeable-sketch family (HLL distinct /
-    KLL quantile / theta set-ops / Bloom membership / CMS counts,
+    KLL quantile / theta set-ops / CMS counts / exact bitmaps,
     operators/sketches.py): the sketch is a (depth, bucket, cnt)
     table of at most d*w rows built in one map-side-combined stream
     pass, shards merge by counter SUM, and every distinct token

@@ -36,10 +36,9 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 
     The target width is DATA-PROPORTIONAL (r16, guide §2.2): at most
     one task per ``minBytesPerTask`` input bytes (conf above, default
-    4 MB), capped at defaultParallelism — measured at sf0.1, the old
-    unconditional defaultParallelism fan-out cost the multi-stage
-    Arrow lanes 1.4-2.4x in pure per-task overhead (PERF_r15's
-    inverse-scaling block; A/B table in OPTIMIZATION_r16.md). When
+    4 MB), capped at defaultParallelism. The 4 MB cap is unmeasured:
+    no A/B table backs it, and it pins every sf0.1 documents/embeddings
+    lane to one task (ROADMAP.md open item 1 replaces it). When
     the input bytes are unknowable (non-file-backed frames) or
     ``min_partitions`` is explicit, the old defaultParallelism /
     explicit behavior stands."""

@@ -82,6 +82,8 @@ def test_no_forced_broadcast_on_scaling_tables(spark):
         ("q_graph_degree", 0, "orders scales"),
         ("q_pagerank", 0, "orders scales"),
         ("q_expectations", 0, "customer RI probe scales"),
+        ("q_contamination", 0, "documents scales"),
+        ("q_decontaminate_bloom", 0, "documents scales"),
     ]
     for name, budget, why in specs:
         n = forced_broadcast_hint_count(_q(spark, name))

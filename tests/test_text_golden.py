@@ -144,6 +144,17 @@ def test_decontaminate(spark):
     assert 2 in ids          # clean → kept
 
 
+def test_decontaminate_empty_benchmark_keeps_everything(spark):
+    from team_02_spark.operators.contamination import decontaminate
+
+    docs = spark.createDataFrame(
+        [(1, "some text here"), (2, "other text there")],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame([], "bench_id long, text string")
+    assert decontaminate(docs, bench, min_shared=2).count() == 2
+
+
 def test_domain_stats_on_url_bearing_rows(spark, tmp_path):
     """ADVICE r3: the fixture corpus contains no http(s) URLs, so the
     driver's q_domain_stats check is 0-rows-vs-0-rows — vacuous. This

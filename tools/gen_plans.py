@@ -46,7 +46,7 @@ HEADLINE = {
     "q_retrieval_metrics": "probe batch broadcast; top-10 window per probe; every metric aggregate is probe-cardinality-sized",
     "q_shard_plan": "deterministic shard assignment is a map; the manifest is one map-side-combined 16-group aggregate",
     "q_pq_search": "codes-only corpus side (m small ints/row); per-query LUT broadcast; ADC scoring is a map + per-query top-k window",
-    "q_decontaminate_bloom": "corpus-wide work is ONE map pass (gram hashes JVM-side, bloom probe Arrow-batched, no explode shuffle); exact gram-join verify sees only bloom candidates",
+    "q_decontaminate_bloom": "exact gram join: corpus 3-grams explode map-side and probe the benchmark's grams, broadcast by size stats (no hint); flagged ids leave through a left-anti join",
     "q_mmr_diverse": "corpus cost = broadcast top-N scoring per query; greedy MMR runs per-query in applyInPandas over <=N-row groups — no driver loop, no corpus re-scan",
     "q_join_salted": "fact+salt vs dim×salt equi-join: hot key spreads over salt shuffle partitions; output multiset identical to the plain join",
     "q_triangles": "degree-ordered orientation: wedge join fans out only at each edge's LOW end (out-degree bounded), closing-edge equi-join on the packed (v,w) long key (r15 — half-width unique-key build) — O(m^1.5) under hub skew",

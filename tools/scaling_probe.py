@@ -1179,59 +1179,6 @@ def hybrid_probe(replication: int) -> None:
     spark.stop()
 
 
-def bloom_probe(replication: int) -> None:
-    """Data-scaling sweep for the bloom decontamination lane: the
-    corpus replicated Nx (benchmark fixed at the base corpus's every-
-    100th doc), decontaminate_bloom end-to-end. The prefilter is a
-    map-only scan, so wall-clock should grow ~linearly and the
-    candidate fraction stay flat — the quantities that make the lane
-    safe at 100 TB. Also records the filter's size/probes, which
-    depend only on the benchmark."""
-    from pyspark.sql import functions as F
-
-    from team_02_spark import get_spark
-    from team_02_spark.operators.bloom import (
-        bloom_candidates, build_ngram_bloom, decontaminate_bloom,
-    )
-
-    spark = get_spark(f"scaling-bloom-{replication}x")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    n = base.count()
-    bench = base.filter(F.col("doc_id") % 100 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    df = base
-    for i in range(1, replication):
-        df = df.unionByName(
-            base.select((F.col("doc_id") + F.lit(i * n)).alias("doc_id"), "text")
-        )
-    df = df.repartition(32).persist()
-    total = df.count()
-    df.write.format("noop").mode("overwrite").save()  # warm
-
-    bits, m, k = build_ngram_bloom(bench)
-    t0 = time.perf_counter()
-    n_cand = bloom_candidates(df, bits, m, k, min_shared=5).count()
-    prefilter_s = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    survivors = decontaminate_bloom(df, bench, min_shared=5).count()
-    total_s = time.perf_counter() - t0
-
-    print(json.dumps({
-        "mode": "bloom", "replication": replication, "n_docs": total,
-        "filter_kib": len(bits) // 1024, "k_probes": k,
-        "candidates": n_cand, "cand_frac": round(n_cand / total, 4),
-        "survivors": survivors,
-        "prefilter_sec": round(prefilter_s, 2),
-        "end_to_end_sec": round(total_s, 2),
-    }))
-    spark.stop()
-
-
 def dsir_probe(replication: int) -> None:
     """Data-scaling sweep for the DSIR selection lane: documents
     replicated N× under fresh ids (source labels preserved, so the
@@ -1579,9 +1526,6 @@ def main() -> None:
         return
     if mode == "journey":
         journey_probe(arg)
-        return
-    if mode == "bloom":
-        bloom_probe(arg)
         return
     from team_02_spark import get_spark
 
