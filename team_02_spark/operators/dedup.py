@@ -70,7 +70,7 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     Returns (id_col, mh_0..mh_{k-1}).
     """
     ex = (
-        ensure_parallelism(df).select(
+        df.select(
             F.col(id_col),
             F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("__sh"),
         )
@@ -203,7 +203,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str, text_col: str,
     """Exact n-gram Jaccard on candidate pairs. Joins the shingle sets
     back and computes |∩|/|∪| with JVM array ops. Returns pairs with
     jaccard >= threshold, columns (a, b, jaccard)."""
-    sets_df = ensure_parallelism(df).select(
+    sets_df = df.select(
         F.col(id_col), F.array_distinct(shingles(text_col, shingle_n)).alias("__set")
     )
     a_sets = sets_df.withColumnRenamed(id_col, "a").withColumnRenamed("__set", "sa")
@@ -291,8 +291,7 @@ def near_dedup_minhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     # drops by construction (J=1 with its smaller-id rep — exactly
     # the keep-first rule).
     sets_df = (
-        ensure_parallelism(df)
-        .select(
+        df.select(
             F.col(id_col),
             F.array_distinct(
                 F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s))

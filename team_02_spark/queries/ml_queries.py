@@ -13,7 +13,6 @@ from team_02_spark.ml.scoring import score_deterministic
 from team_02_spark.ml.tokenize import attention_mask, hash_subword_encode
 from team_02_spark.queries.registry import query
 from team_02_spark.queries._util import t
-from team_02_spark.util import ensure_parallelism
 
 
 @query(
@@ -80,7 +79,7 @@ def q_tokenize(spark, sf_dir):
     one Arrow-batched stage. Arrays exit as scalars/joined strings.
     Since r9 the whole chain is pinned by a full DuckDB oracle (the
     stand-in's md5 piece ids are exactly recomputable SQL-side)."""
-    docs = ensure_parallelism(t(spark, sf_dir, "documents"))
+    docs = t(spark, sf_dir, "documents")
     ids = hash_subword_encode(F.col("text"))
     out = docs.select("doc_id", ids.alias("ids"))
     return out.select(
@@ -97,7 +96,7 @@ def q_embed(spark, sf_dir):
     """U2: deterministic hash-projection document embedding (64-d,
     unit-norm) — the engine's DistilBERT stand-in with identical
     plumbing (iterator pandas_udf, Arrow batches)."""
-    docs = ensure_parallelism(t(spark, sf_dir, "documents"))
+    docs = t(spark, sf_dir, "documents")
     emb = hash_embed(F.col("text"))
     return docs.select(
         "doc_id",
@@ -136,7 +135,7 @@ def q_score_multi(spark, sf_dir):
     reference's per-row/per-model loop, src/main.py:151-157, spec form
     per SURVEY §2.10.2). Deterministic md5-parity stand-in models —
     exact predictions oracle-checked."""
-    docs = ensure_parallelism(t(spark, sf_dir, "documents"))
+    docs = t(spark, sf_dir, "documents")
     return score_deterministic(docs.select("doc_id"), "doc_id", _SCORE_MODELS)
 
 

@@ -71,7 +71,7 @@ def q_token_topk(spark, sf_dir):
     → token frequency → top-20. Exercises scan, projection, array HOFs,
     explode, hash agg, TakeOrdered — one shuffle for the agg, one
     top-k. This is also ``entry()``'s query."""
-    docs = ensure_parallelism(t(spark, sf_dir, "documents").select("text"))
+    docs = t(spark, sf_dir, "documents").select("text")
     return (
         docs.select(F.explode(clean_tokens(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -108,7 +108,7 @@ def q_clean_text(spark, sf_dir):
 def q_clean_stem(spark, sf_dir):
     """F1-F5 with Porter stemming (pandas_udf, Arrow-batched) — the
     full reference cleaning pipeline (src/main.py:51-61, intent form)."""
-    docs = ensure_parallelism(t(spark, sf_dir, "documents"))
+    docs = t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.array_join(clean_and_stem(F.col("text")), " ").alias("stemmed_text"),
@@ -1156,9 +1156,8 @@ def q_pmi_bigrams(spark, sf_dir):
     regex-cleaned the corpus twice (uni + bigram lanes); this halves
     the expensive tokenization work at any scale. ln() is libm, so
     PMI is snapped to DECIMAL(18,8) before exiting (FIXTURES.md §C)."""
-    docs = ensure_parallelism(
-        t(spark, sf_dir, "documents").select("text")
-    ).select(clean_tokens(F.col("text")).alias("tk"))
+    docs = t(spark, sf_dir, "documents").select(
+        clean_tokens(F.col("text")).alias("tk"))
     # (w, nxt) per token occurrence; nxt NULL terminates each doc
     pair_expr = F.expr(
         "CASE WHEN size(tk) >= 1 THEN transform(sequence(1, size(tk)), "
@@ -1274,9 +1273,8 @@ def q_keyword_tfidf(spark, sf_dir):
     cannot flip on a last-ulp libm difference. Two partial-agg
     shuffles (tf, df), the doc-count scalar broadcasts, one per-doc
     window keeps k."""
-    docs = ensure_parallelism(
-        t(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", clean_tokens(F.col("text")).alias("tk"))
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", clean_tokens(F.col("text")).alias("tk"))
     toks = docs.select("doc_id", F.explode("tk").alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     df_ = toks.groupBy("token").agg(F.count_distinct("doc_id").alias("df"))
@@ -1407,7 +1405,7 @@ def q_char_ngrams(spark, sf_dir):
     trigram windows are generated with sequence+transform (JVM HOFs,
     no UDF), exploded once, and partial-aggregated map-side before the
     single shuffle; top-20 is TakeOrdered."""
-    docs = ensure_parallelism(t(spark, sf_dir, "documents").select("text"))
+    docs = t(spark, sf_dir, "documents").select("text")
     grams = docs.select(
         F.explode(
             F.expr(
@@ -1913,7 +1911,7 @@ def q_cms_topk(spark, sf_dir):
     table form is the production path here. Output includes exact
     counts and the per-token overestimate so sketch error is visible."""
     docs = t(spark, sf_dir, "documents")
-    toks = ensure_parallelism(docs).select(
+    toks = docs.select(
         F.explode(
             F.array_remove(F.split(F.lower(F.col("text")), r"\W+"), "")
         ).alias("token")
@@ -2053,7 +2051,7 @@ def q_zipf_fit(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     from pyspark.sql import Window as W
 
-    toks = ensure_parallelism(docs).select(
+    toks = docs.select(
         F.explode(
             F.array_remove(F.split(F.lower(F.col("text")), r"\W+"), "")
         ).alias("tok")

@@ -88,9 +88,7 @@ def q_knn_lsh(spark, sf_dir):
     probes = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    # r14: single-file fixture scans as 1 partition — parallelize the
-    # corpus-side hash/re-rank stages (no-op on partitioned inputs)
-    return knn_lsh(probes, ensure_parallelism(emb), 10, dim=64)
+    return knn_lsh(probes, emb, 10, dim=64)
 
 
 @query(
@@ -464,11 +462,7 @@ def q_pq_search(spark, sf_dir):
     probes = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    # r14: a single-file fixture scans as ONE partition, serializing
-    # the encode + ADC Arrow stages onto one core (event-logged: the
-    # whole shortlist ran as a 1-task broadcast build); same remedy
-    # as q_knn_topk, a no-op on well-partitioned 100 TB inputs
-    corpus = ensure_parallelism(emb.filter(F.col("vec_id") >= 5))
+    corpus = emb.filter(F.col("vec_id") >= 5)
     # empty-corpus guard (same contract as knn_ivf): KMeans cannot fit
     # zero rows — return the empty result with the stable schema
     if corpus.select("vec_id").first() is None:
@@ -507,9 +501,7 @@ def q_ivf_pq_serve(spark, sf_dir):
     probes = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    # single-file fixture -> 1 scan partition; parallelize the build's
-    # encode stage (the serve path reads the cached layout instead)
-    corpus = ensure_parallelism(emb.filter(F.col("vec_id") >= 5))
+    corpus = emb.filter(F.col("vec_id") >= 5)
     if corpus.select("vec_id").first() is None:  # KMeans can't fit 0 rows
         return probes.select(
             "q_id",
@@ -1153,7 +1145,7 @@ def _semdedup_frame(spark, sf_dir, two_level: bool = False,
         kmeans_assign_twolevel,
     )
 
-    emb = ensure_parallelism(t(spark, sf_dir, "embeddings"))
+    emb = t(spark, sf_dir, "embeddings")
     assign = kmeans_assign_twolevel if two_level else kmeans_assign
     # r15: assignment is map-side (clustering._tag), so the raw
     # embedding rides along via keep= — the former emb ⋈ clusters
@@ -1240,9 +1232,7 @@ def q_jl_project(spark, sf_dir):
     doubles instead of engine-specific array renderings."""
     from team_02_spark.operators.clustering import jl_project
 
-    emb = ensure_parallelism(t(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     proj = jl_project(emb, "embedding", d_out=16, d_in=64)
     return proj.select(
         "vec_id", F.posexplode("z").alias("dim", "v")
@@ -1416,7 +1406,7 @@ def q_cluster_profile(spark, sf_dir):
     divide is one IEEE op rounded 6dp."""
     from team_02_spark.operators.clustering import kmeans_assign
 
-    emb = ensure_parallelism(t(spark, sf_dir, "embeddings"))
+    emb = t(spark, sf_dir, "embeddings")
     asg = kmeans_assign(emb, "embedding", "vec_id", k=8, iters=2)
     tot = asg.agg(F.count("*").alias("n_total"))
     return (

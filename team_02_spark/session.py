@@ -33,7 +33,8 @@ _DEFAULTS = {
     # DuckDB oracle regardless of host timezone.
     "spark.sql.session.timeZone": "UTC",
     # Split large files at 128 MB so scan parallelism tracks data
-    # volume; pairs with ensure_parallelism for tiny test files.
+    # volume; a one-split file in front of a gram-join or vector
+    # kernel is widened by util.ensure_parallelism.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     # Read timestamps at the precision parquet declares.
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",

@@ -10,64 +10,24 @@ from pyspark.sql import DataFrame
 # default "true" is right for local runs over tiny fixture files.
 ENSURE_PARALLELISM_CONF = "spark.team02.ensureParallelism"
 
-# r16 (guide §2.2 / r15 verdict #3): how many input bytes justify one
-# repartitioned task. The old unconditional fan-out to
-# defaultParallelism made 14 of 51 headline lanes run FASTER at 8
-# cores than 32 (PERF_r15 scaling block) — 32-way round-robin of a
-# sub-MB fixture input is pure per-task/Arrow-batch overhead.
-# Width is now data-proportional: ceil(input_bytes / this), floored at
-# 1, capped at defaultParallelism — so tiny inputs stop over-fanning
-# while any input big enough to need the cores still gets all of them
-# (and genuinely large inputs never repartition at all, as before).
-ENSURE_PARALLELISM_MIN_BYTES_CONF = "spark.team02.ensureParallelism.minBytesPerTask"
-_MIN_BYTES_PER_TASK_DEFAULT = 4 * 1024 * 1024
 
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin a frame that has fewer partitions than
+    ``defaultParallelism`` out to ``defaultParallelism``; wider frames
+    pass through untouched.
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition a too-thin input toward the core count. A small
-    parquet file scans as 1 partition and would serialize every
-    downstream explode / pandas_udf onto one core; one cheap
-    round-robin shuffle of the narrow input unlocks parallelism.
-    Inputs that are already well-partitioned (the 100 TB case) pass
-    through untouched — and the partition-count probe itself (df.rdd,
-    a plan→RDD conversion, no job) is config-gated off entirely via
-    ``spark.team02.ensureParallelism=false`` so cluster deployments
-    keep the pure-lazy contract (judge r1 #8).
-
-    The target width is DATA-PROPORTIONAL (r16, guide §2.2): at most
-    one task per ``minBytesPerTask`` input bytes (conf above, default
-    4 MB), capped at defaultParallelism. The 4 MB cap is unmeasured:
-    no A/B table backs it, and it pins every sf0.1 documents/embeddings
-    lane to one task (ROADMAP.md open item 1 replaces it). When
-    the input bytes are unknowable (non-file-backed frames) or
-    ``min_partitions`` is explicit, the old defaultParallelism /
-    explicit behavior stands."""
+    Call it only directly in front of a JVM kernel whose per-row work
+    dwarfs its input bytes: a shingle/gram explode feeding a join, or a
+    per-row vector distance/argmin. Never in front of a Python UDF:
+    every extra concurrent task holds its own Python worker, so the
+    fan-out costs RSS and CPU for little wall time. Nor in front of a
+    plain column-op or explode-then-aggregate lane. SCALING.md
+    "ensure_parallelism call sites" has the per-site measurements
+    behind each kept call."""
     spark = df.sparkSession
     if str(spark.conf.get(ENSURE_PARALLELISM_CONF, "true")).lower() == "false":
         return df
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    if min_partitions is None:
-        import os
-
-        try:
-            files = df.inputFiles()
-        except Exception:  # non-file-backed plan: keep old behavior
-            files = []
-        total, sized = 0, bool(files)
-        for p in files:
-            local = p.removeprefix("file:")
-            try:
-                total += os.path.getsize(local)
-            except OSError:  # non-local scheme / vanished file
-                sized = False
-                break
-        if sized:
-            min_bytes = int(spark.conf.get(
-                ENSURE_PARALLELISM_MIN_BYTES_CONF,
-                str(_MIN_BYTES_PER_TASK_DEFAULT),
-            ))
-            if min_bytes > 0:
-                target = min(target, max(1, -(-total // min_bytes)))
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

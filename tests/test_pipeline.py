@@ -17,21 +17,44 @@ from team_02_spark.pipeline import (
     prepare_training_data,
     run_inference_pipeline,
 )
+from tests.conftest import SF_SMOKE
 
 # The reference's committed sample is the post-drop snapshot
 # (,sentiment,tweet). Rebuild a Sentiment140-layout CSV from it so the
 # S1 scan path (6 cols, latin-1, headerless) is exercised end to end.
+# Without it, the same layout comes from the sf0.01 documents fixture:
+# text is the tweet, and md5(doc_id) picks a deterministic 0/4 label.
 REF_FIXTURE = "/root/reference/data/tweets_1000.csv"
+DOCS_FIXTURE = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01",
+                            "documents.parquet")
+
+
+def _sentiment_rows() -> list[tuple[str, str, str]]:
+    """(id, sentiment, tweet) rows, from the reference sample if present."""
+    import csv
+    import hashlib
+
+    if os.path.exists(REF_FIXTURE):
+        return [tuple(r) for r in
+                list(csv.reader(open(REF_FIXTURE, encoding="latin-1")))[1:]]
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(DOCS_FIXTURE, columns=["doc_id", "text"]).to_pylist()
+    return [
+        (str(d["doc_id"]),
+         "4" if hashlib.md5(str(d["doc_id"]).encode()).digest()[0] & 1 else "0",
+         d["text"])
+        for d in docs
+    ]
 
 
 def _make_sentiment140_csv(tmpdir: str) -> str:
     import csv
 
-    src = list(csv.reader(open(REF_FIXTURE, encoding="latin-1")))[1:]
     path = os.path.join(tmpdir, "tweets.csv")
     with open(path, "w", encoding="latin-1", newline="") as f:
         w = csv.writer(f)
-        for idx, sent, tweet in src:
+        for idx, sent, tweet in _sentiment_rows():
             w.writerow([sent, idx, "Mon Apr 06 22:19:45 PDT 2009", "NO_QUERY",
                         f"user{idx}", tweet])
     return path

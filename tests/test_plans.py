@@ -115,6 +115,31 @@ def test_python_only_where_declared(spark):
     assert uses_python_udf(_q(spark, "q_multimodal_features"))
 
 
+def test_fan_out_only_in_front_of_jvm_kernels(spark):
+    """ensure_parallelism's call-site rule: the single-file fixture is
+    round-robined out to the cores in front of the gram-join and
+    vector kernels, and never in front of a Python UDF lane (each
+    extra task would hold its own Python worker)."""
+    from team_02_spark.plans import explain_str
+    from team_02_spark.util import SHARED_PASS_INLINE_CONF
+
+    if spark.sparkContext.defaultParallelism < 2:
+        return  # nothing to fan out to
+    # shared_pass would truncate q_dedup_ngram's plan at its checkpoint
+    spark.conf.set(SHARED_PASS_INLINE_CONF, "true")
+    try:
+        plans = {name: explain_str(_q(spark, name)) for name in (
+            "q_dedup_ngram", "q_decontaminate_bloom", "q_kmeans_adaptive",
+            "q_knn_topk", "q_clean_stem", "q_embed", "q_tokenize")}
+    finally:
+        spark.conf.unset(SHARED_PASS_INLINE_CONF)
+    for name in ("q_dedup_ngram", "q_decontaminate_bloom",
+                 "q_kmeans_adaptive", "q_knn_topk"):
+        assert "RoundRobinPartitioning" in plans[name], name
+    for name in ("q_clean_stem", "q_embed", "q_tokenize"):
+        assert "RoundRobinPartitioning" not in plans[name], name
+
+
 def test_wholestage_codegen_active(spark):
     for name in ("q_groupby_agg", "q_join_multi", "q_filter_compound"):
         assert wholestage_codegen_spans(_q(spark, name)) >= 1, name
@@ -173,10 +198,7 @@ def test_jl_projection_is_map_only(spark):
     from team_02_spark.plans.inspect import uses_python_udf
 
     df = _q(spark, "q_jl_project")
-    # the ONE allowed exchange is ensure_parallelism's round-robin
-    # repartition of the single-file local fixture (fan-out for 32
-    # cores) — the projection itself adds zero exchanges on top
-    assert shuffle_count(df) <= 1
+    assert shuffle_count(df) == 0
     assert not uses_python_udf(df)
 
 

@@ -403,6 +403,20 @@ def test_ensure_parallelism_conf_gate(spark):
         spark.conf.unset(ENSURE_PARALLELISM_CONF)
 
 
+def test_ensure_parallelism_widens_small_parquet(spark, tmp_path):
+    """A single-file parquet far under any byte threshold scans as one
+    partition and is still widened to defaultParallelism: the width
+    does not depend on input bytes."""
+    from team_02_spark.util import ensure_parallelism
+
+    width = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "small.parquet")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    small = spark.read.parquet(path)
+    assert small.rdd.getNumPartitions() == 1
+    assert ensure_parallelism(small).rdd.getNumPartitions() == width
+
+
 def test_media_repartition_precomputed_stat(spark):
     from team_02_spark.operators.multimodal import media_repartition
 

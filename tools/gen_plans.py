@@ -83,7 +83,7 @@ HEADLINE = {
     "q_semdedup": "SemDeDup cascade: kmeans clusters -> xxhash64(raw) min/min_by exact pre-collapse (clone-immune, r12 raw-keyed) -> within-cluster pair join on reps with Arrow pdot verify -> keep-first anti-join",
     "q_kmeans_twolevel": "coarse-then-refine assignment: exact coarse Lloyd (map-side argmin, r15), two-phase per-cell seed rank (no whole-cell sort task), fine argmin is a map over the per-cell centroid array broadcast-joined on the cell id — per-row work (kc+kf)*d, not k*d",
     "q_dedup_simhash": "4-block pigeonhole equi-joins over one localCheckpointed fingerprint pass; hot blocks triangle-split (r12) instead of excluded — recall at hamming<=3 unconditional",
-    "q_jl_project": "map-only JL projection: plan-time literal sign matrix, per-row left-fold dots, posexplode exit; zero exchanges from the operator (the one visible is ensure_parallelism's local-fixture fan-out) — the map-only shape a 100 TB pre-step must have",
+    "q_jl_project": "map-only JL projection: plan-time literal sign matrix, per-row left-fold dots, posexplode exit; zero exchanges — the map-only shape a 100 TB pre-step must have",
     "q_semdedup_twolevel": "the SemDeDup cascade on the two-level derived-k assignment (r13): corpus-count-derived (kc, kf) split, coarse-then-refine Lloyd, raw-keyed exact pre-collapse, within-COMPOSITE-cluster pair join — assignment per-row work (kc+kf)*d while the prune stage is unchanged",
     "q_ivf_pq_serve": "fit-ONCE serving form (r14): probed cells read partition-pruned (PartitionFilters on __cell), ADC scores codes-only via the per-unique-probe LUT kernel, exact rerank touches only the shortlist's raw vectors — no fit job anywhere in the plan (index metadata loads from the cache's _index_meta.json)",
 }
