@@ -145,11 +145,17 @@ def shared_pass(df: DataFrame, *, eager: bool = False) -> DataFrame:
 
     ``eager`` forces materialization now — iterative callers
     (connected components) need it to cap plan growth per round.
+
+    A streaming frame passes through unchanged: its sink executes it
+    once per micro-batch, so there is no lineage to truncate (and a
+    streaming frame cannot be checkpointed).
     """
     spark = df.sparkSession
     sc = spark.sparkContext
     if str(spark.conf.get(SHARED_PASS_INLINE_CONF, "false")).lower() == "true":
         return df  # explain-dump passthrough — see SHARED_PASS_INLINE_CONF
+    if df.isStreaming:
+        return df
     mode = str(spark.conf.get(SHARED_PASS_RELIABLE_CONF, "auto")).lower()
     local = sc.master.startswith("local")
     if mode == "true" or (mode == "auto" and not local):

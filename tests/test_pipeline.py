@@ -180,3 +180,46 @@ def test_write_training_shards_layout(spark, tmp_path):
     ids0 = [r["doc_id"] for r in spark.read.parquet(*s0).collect()]
     ids1 = [r["doc_id"] for r in spark.read.parquet(*s1).collect()]
     assert ids0 == ids1 and len(ids0) > 0
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_featurize_materializes_once_and_changes_no_result(spark):
+    """featurize ends in shared_pass: every consumer of the featurized
+    frame reads the checkpointed rows, so the stem/embed pandas_udfs
+    (ArrowEvalPython) are gone from the executed plan of each fit,
+    split and confusion job. The inline-explain conf restores the full
+    plan, and both frames give the same rows and confusion counts."""
+    from team_02_spark.util import SHARED_PASS_INLINE_CONF
+
+    def ready(feats):
+        return feats.select(
+            "id", "tokens", "embedding",
+            F.when(F.col("sentiment") == 4, 1).otherwise(0).alias("y"),
+        )
+
+    with tempfile.TemporaryDirectory() as tmp:
+        data = prepare_training_data(spark, _make_sentiment140_csv(tmp),
+                                     per_class=50)
+        shared = ready(featurize(data))
+        spark.conf.set(SHARED_PASS_INLINE_CONF, "true")
+        try:
+            inline = ready(featurize(data))
+        finally:
+            spark.conf.unset(SHARED_PASS_INLINE_CONF)
+
+        shared_rows = shared.collect()
+        inline_rows = inline.collect()
+        assert "ArrowEvalPython" not in _executed_plan(shared)
+        assert "ExistingRDD" in _executed_plan(shared)
+        assert "ArrowEvalPython" in _executed_plan(inline)
+        assert sorted(map(tuple, shared_rows)) == sorted(map(tuple, inline_rows))
+
+        zoo = trainers()
+        cells = ("tp", "fp", "fn", "tn")
+        for name in ("logistic_regression", "gaussian_nb"):
+            a, b = (train_with_tracking(f, "embedding", "y", name, zoo[name])[1]
+                    for f in (shared, inline))
+            assert [a[k] for k in cells] == [b[k] for k in cells], name

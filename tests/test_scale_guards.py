@@ -619,6 +619,20 @@ def test_shared_pass_persist_fallback_eager_truncates_lineage(spark):
         )
 
 
+def test_shared_pass_passes_streaming_frame_through(spark, tmp_path):
+    """A streaming frame cannot be checkpointed and its sink runs it
+    per micro-batch: shared_pass hands it back unchanged under both
+    strategies instead of raising."""
+    from team_02_spark.util import shared_pass
+
+    stream = spark.readStream.schema("id long, tweet string").json(
+        str(tmp_path))
+    for mode in ("auto", "true"):
+        with _conf(spark, spark__team02__reliableSharedPass=mode):
+            out = shared_pass(stream)
+        assert out.isStreaming and out.columns == ["id", "tweet"]
+
+
 def test_connected_components_under_reliable_strategy(spark, tmp_path):
     """The iterative caller end to end on the reliable branch: a
     two-component graph converges, labels are min-ids, and the loop's
