@@ -138,9 +138,10 @@ def minhash_candidate_pairs(sig: DataFrame, id_col: str,
     default, chosen to match the repo-wide LSH target_bucket_size)
     the clamp makes cells grow linearly again; a near-clone cluster
     past that is a curation bug upstream of dedup (SCALING.md
-    §near-clone residual). Measured (tools/scaling_probe.py minhash):
-    the 2k near-clone residual drops 28.1 s → 9.5 s end-to-end once
-    its generation is forced hot (cap=512), same survivors; at 20k
+    §near-clone residual). Measured (SCALING.md, "MinHash dedup under
+    a hot band (round 10)"): the 2k near-clone residual drops
+    28.1 s → 9.5 s end-to-end once its generation is forced hot
+    (cap=512), same survivors; at 20k
     near-clones the former 2.0e8-pair single key spreads over S=20
     sub-groups / 210 cells with a 1.10e6-pair max cell (181×).
 

@@ -626,8 +626,7 @@ def pq_search_adc(queries: DataFrame, encoded: DataFrame,
                   codebooks: list[list[list[float]]], k: int, *,
                   q_id: str = "q_id", c_id: str = "vec_id",
                   q_vec: str = "q_vec",
-                  on: list[str] | None = None,
-                  partial_cut: bool = True) -> DataFrame:
+                  on: list[str] | None = None) -> DataFrame:
     """Asymmetric distance computation (ADC): each query builds its
     m x n_codes lookup table of exact subvector→centroid distances
     (JVM expressions over the codebook literals), and every encoded
@@ -684,13 +683,10 @@ def pq_search_adc(queries: DataFrame, encoded: DataFrame,
         scored = encoded.join(F.broadcast(queries))
     scored = scored.withColumn("adist", _adc(F.col(q_vec), F.col("pq_codes")))
     # the ADC pass scans every code per probe BY DESIGN (that is the
-    # PQ economics); the rank input need not follow — partial cut.
-    # ``partial_cut=False`` exists ONLY for the before/after scaling
-    # probe (tools/scaling_probe.py pqcut — r12 verdict #1 pinned the
-    # lane's measurement after the cut landed unbenched); production
-    # callers keep the cut so a hot probe never sorts in one task.
-    if partial_cut:
-        scored = partial_topk(scored, q_id, k, F.asc("adist"), F.col(c_id))
+    # PQ economics); the rank input need not follow — partial cut, so
+    # a hot probe never sorts in one task (SCALING.md, "Round 13: PQ/IVF
+    # partial-rank cut measured").
+    scored = partial_topk(scored, q_id, k, F.asc("adist"), F.col(c_id))
     w = Window.partitionBy(q_id).orderBy(F.asc("adist"), F.col(c_id))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -705,8 +701,7 @@ def pq_search_rerank(queries: DataFrame, encoded: DataFrame,
                      shortlist: int | None = None,
                      q_id: str = "q_id", c_id: str = "vec_id",
                      q_vec: str = "q_vec",
-                     c_vec: str = "embedding",
-                     partial_cut: bool = True) -> DataFrame:
+                     c_vec: str = "embedding") -> DataFrame:
     """PQ shortlist + exact re-rank — the deployed form of PQ search
     (and the reason PQ works on corpora with weak subspace structure,
     where raw ADC ranking is quantization-noise-limited): ADC keeps a
@@ -717,8 +712,7 @@ def pq_search_rerank(queries: DataFrame, encoded: DataFrame,
     economics of the byte index with the accuracy of exact scoring."""
     shortlist = shortlist or 5 * k
     sl = pq_search_adc(queries, encoded, codebooks, shortlist,
-                       q_id=q_id, c_id=c_id, q_vec=q_vec,
-                       partial_cut=partial_cut)
+                       q_id=q_id, c_id=c_id, q_vec=q_vec)
     cand = (
         sl.select(q_id, c_id)
         .join(corpus.select(F.col(c_id), F.col(c_vec)), c_id)

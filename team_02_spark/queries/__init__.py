@@ -1,13 +1,13 @@
 """Declared correctness queries (SURVEY.md §2 planned keys).
 
 Each module registers queries via the decorator in ``registry``; the
-driver-facing ``__spark_entry__.py`` re-exports the assembled dicts.
+driver-facing ``__spark_entry__.py`` orders them into the assembled dicts.
 Importing this package imports every query module (registration is an
 import side effect by design — one flat namespace, checked for
 collisions).
 """
 
-from team_02_spark.queries.registry import QUERIES, oracle_sql_map, query, queries_map
+from team_02_spark.queries.registry import QUERIES, query
 
 # Import order = SURVEY §7.2 build order. Each import registers keys.
 from team_02_spark.queries import relational  # noqa: E402,F401
@@ -39,4 +39,4 @@ from team_02_spark.queries import r8_queries  # noqa: E402,F401
 from team_02_spark.queries import r9_queries  # noqa: E402,F401
 from team_02_spark.queries import tpch_partsupp  # noqa: E402,F401
 
-__all__ = ["QUERIES", "query", "queries_map", "oracle_sql_map"]
+__all__ = ["QUERIES", "query"]

@@ -5,9 +5,14 @@ headline queries. Run after any change to a headline query's shape:
 """
 # (Body mirrors the inline generation used in round 1; kept as a tool
 # so the doc never goes stale silently.)
-from team_02_spark import get_spark
-from team_02_spark.queries import QUERIES
-from team_02_spark.plans.inspect import (
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from team_02_spark import get_spark  # noqa: E402
+from team_02_spark.queries import QUERIES  # noqa: E402
+from team_02_spark.plans.inspect import (  # noqa: E402
     explain_str, shuffle_count, has_broadcast_join, uses_python_udf,
 )
 

@@ -8,7 +8,7 @@ Usage:
     python tools/verify_driver.py --sf sf0.1         # scale sweep
     python tools/verify_driver.py q_pagerank q_auc   # subset
     python tools/verify_driver.py --window           # the projected
-        50-key driver window (pins + new + stalest), the end-of-round
+        50-key driver window (red + pinned + new + stalest), the end-of-round
         pre-driver evidence sweep
     python tools/verify_driver.py --times ...        # also print each
         key's wall seconds (Spark side only, query + compare fetch),
@@ -47,12 +47,12 @@ def main() -> int:
         args.remove("--times")
     if "--window" in args:
         # sweep exactly the keys the round driver will check next:
-        # the first 50 of the registry's retry/recheck/new/staleness
-        # ordering (the end-of-round pre-driver evidence sweep)
+        # the first 50 of __spark_entry__'s window order (red, pinned
+        # or unchecked keys, then stalest rows first)
         args.remove("--window")
-        import team_02_spark.queries.registry as R
+        import __spark_entry__ as e
 
-        args += [n for n in R.queries_map()][:50]
+        args += list(e.queries())[:50]
     sf_dir = f"/root/testdata/{sf}"
 
     import duckdb
