@@ -339,18 +339,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return (F.size(pieces) + long_extra).cast("int")
 
 
-def doc_fingerprint(text: Column) -> Column:
-    """Rolling-hash-style document fingerprint: xxhash64 of the document
-    plus min-of-window-hashes over 8-char shingles (winnowing flavor) —
-    here the cheap deterministic form: xxhash64(text) combined with
-    md5 prefix, giving a 16-byte printable id."""
-    return F.concat_ws(
-        "-",
-        F.format_string("%016x", F.xxhash64(text)),
-        F.substring(F.md5(text), 1, 8),
-    )
-
-
 # ----------------------------------------------- data-hygiene lane
 # PII scrubbing and repetition filtering — standard LLM training-data
 # hygiene, all Catalyst expressions (scan-speed, no UDF).

@@ -39,24 +39,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def normalize(a: Column) -> Column:
-    """Unit-normalize; all-zero vectors pass through unchanged."""
-    n = l2_norm(a)
-    return F.when(n == 0.0, a).otherwise(
-        F.transform(a, lambda x: (x / n).cast("float"))
-    )
-
-
 # ------------------------------------------ hyperplane sign-bit hashes
 #
 # LSH bucket ids = sign bits of fixed pseudo-random projections. Unlike
@@ -124,7 +106,7 @@ def pdot(a: Column, b: Column) -> Column:
 
 def punit(a: Column) -> Column:
     """Arrow-batched unit-normalize (float output, zero vectors pass
-    through) — same contract as :func:`normalize`, for rows-only lanes
+    through), for rows-only lanes
     that already cross into Python for bucket hashing: one numpy pass
     per batch instead of a per-element interpreted transform (which
     Catalyst may additionally push below an explode, multiplying the

@@ -39,19 +39,6 @@ def _token_vec(token: str, dim: int) -> np.ndarray:
     return rng.standard_normal(dim).astype(np.float32)
 
 
-def _embed_one(text: str | None, dim: int) -> list[float]:
-    if not text:
-        return [0.0] * dim
-    toks = text.split()
-    if not toks:
-        return [0.0] * dim
-    m = np.mean([_token_vec(tk, dim) for tk in toks], axis=0)
-    n = float(np.linalg.norm(m))
-    if n > 0:
-        m = m / n
-    return [float(x) for x in m]
-
-
 @F.pandas_udf(T.ArrayType(T.FloatType()))
 def hash_embed(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """U2 stand-in, iterator form: per-batch vectorized embedding with

@@ -6,7 +6,8 @@ All are pure DataFrame compositions: no MLlib fitting, no driver state,
 no iteration except where transitive closure genuinely requires it.
 
 Algorithms (all public/classic):
-- exact:        hash-groupBy on content or md5(content)
+- exact:        hash-groupBy on md5(content) (pipeline_data.curate;
+                relational.dedup_exact on a column subset)
 - MinHash+LSH:  shingle → k minhashes (xxhash64 with k salts) → band
                 signatures → band-bucket join → Jaccard verify
 - SimHash:      64-bit sign-of-weighted-bit-sums fingerprint
@@ -26,23 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from team_02_spark.functions.vectors import (
-    band_buckets, cosine, hyperplane_bucket, normalize, pdot, punit,
-    remap_hot_buckets,
+    band_buckets, hyperplane_bucket, pdot, punit, remap_hot_buckets,
 )
 from team_02_spark.util import ensure_parallelism, release_shared, shared_pass
-
-
-# ------------------------------------------------------------- exact
-
-def dedup_exact_content(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact content dedup: one row survives per distinct text. Uses
-    md5(text) as the shuffle key so wide text never travels twice."""
-    return (
-        df.withColumn("__k", F.md5(F.col(text_col)))
-        .withColumn("__pick", F.min(F.col("doc_id")).over(Window.partitionBy("__k")))
-        .filter(F.col("doc_id") == F.col("__pick"))
-        .drop("__k", "__pick")
-    )
 
 
 # ----------------------------------------------------- MinHash + LSH
@@ -197,26 +184,6 @@ def minhash_candidate_pairs(sig: DataFrame, id_col: str,
         )
     )
     return cold_pairs.unionByName(hot_pairs).distinct()
-
-
-def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str, text_col: str,
-                   threshold: float, shingle_n: int = 3) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs. Joins the shingle sets
-    back and computes |∩|/|∪| with JVM array ops. Returns pairs with
-    jaccard >= threshold, columns (a, b, jaccard)."""
-    sets_df = df.select(
-        F.col(id_col), F.array_distinct(shingles(text_col, shingle_n)).alias("__set")
-    )
-    a_sets = sets_df.withColumnRenamed(id_col, "a").withColumnRenamed("__set", "sa")
-    b_sets = sets_df.withColumnRenamed(id_col, "b").withColumnRenamed("__set", "sb")
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    union = F.size(F.array_union(F.col("sa"), F.col("sb")))
-    return (
-        pairs.join(a_sets, "a").join(b_sets, "b")
-        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
 
 
 def near_dedup_minhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",

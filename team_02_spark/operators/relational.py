@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from team_02_spark.util import knuth_uniform
+
 
 def det_order_key(col: Column) -> Column:
     """Deterministic pseudo-random order key both Spark and DuckDB agree
@@ -47,14 +49,6 @@ def stratified_sample_exact(
     )
 
 
-def stratified_sample_fractions(
-    df: DataFrame, strata: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Approximate per-stratum Bernoulli sample — the scale path (no
-    shuffle at all; sampleBy is a map-side filter)."""
-    return df.sampleBy(strata, fractions, seed)
-
-
 def bernoulli_sample_deterministic(
     df: DataFrame, strata: str, fractions: dict[str, float], *, key: str,
     salt: str = "|bern"
@@ -78,12 +72,6 @@ def bernoulli_sample_deterministic(
     # rows outside the fraction map: bound is NULL -> predicate NULL
     # -> filtered out
     return df.filter(gate < bound)
-
-
-def random_split(df: DataFrame, weights: list[float], seed: int = 15) -> list[DataFrame]:
-    """M6: holdout split (reference: train_test_split(test_size=0.2,
-    random_state=15), src/main.py:89)."""
-    return df.randomSplit(weights, seed=seed)
 
 
 def deterministic_split(df: DataFrame, frac: float, key: str) -> tuple[DataFrame, DataFrame]:
@@ -125,21 +113,7 @@ def weighted_sample_exact(df: DataFrame, weight: Column | str, n: int, *,
     engine, so the declared query is oracle-checkable), not an RNG.
     One TakeOrdered pass; no shuffle beyond the top-n."""
     w_col = F.col(weight) if isinstance(weight, str) else weight
-    # Knuth multiplicative hash → (0,1): ((k*2654435761) mod 2^32 + 1) / (2^32 + 1).
-    # decimal(38,0), not bigint: k * 2654435761 overflows int64 for
-    # k >= ~3.47e9 (ANSI mode throws) — real territory for 100-TB ids.
-    # The DuckDB oracle mirrors this with an explicit HUGEINT cast.
-    u = (
-        (
-            F.pmod(
-                F.col(key).cast("decimal(38,0)") * F.lit(2654435761),
-                F.lit(4294967296),
-            )
-            + 1
-        ).cast("double")
-        / F.lit(4294967297.0)
-    )
-    score = -F.log(u) / w_col
+    score = -F.log(knuth_uniform(key)) / w_col
     return (
         df.withColumn("__score", score)
         .orderBy("__score", F.col(key))

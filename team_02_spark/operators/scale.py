@@ -3,10 +3,24 @@ equi-joins: key-salting for skew, and bucketed tables for co-located
 (shuffle-free) joins.
 
 AQE's skew-join splitting (on by default, session.py) handles most
-skew at runtime; ``salted_join`` is the explicit form for the cases
-AQE can't see — e.g. a skewed BROADCAST-ineligible dimension or a
-pre-aggregation — and for engines/plans where deterministic layout
-matters more than adaptivity.
+skew at runtime by splitting oversized SMJ partitions; ``salted_join``
+is the explicit, planner-independent form for the pathological case
+(complements q_key_skew's heavy-hitter profiler) — one key holding a
+double-digit percentage of a 100 TB fact table, where even a split
+partition's *single key group* exceeds an executor. The transform is
+exact: each fact row carries one of ``salt`` random tags, the
+dimension side is replicated once per tag, and the equi-join keys
+gain the tag — every fact row still meets exactly one replica of each
+matching dimension row, so the output multiset is identical to the
+plain join while the hot key's rows spread over ``salt`` shuffle
+partitions.
+
+Cost model: the dimension side is replicated ``salt``× (choose salt ~
+hot-key-rows / target-partition-rows, not thousands; never salt two
+big sides — pre-aggregate instead); the fact side gains one narrow int
+column and shuffles once on (key, salt) instead of once on key. Worth
+it only when the dimension is much smaller than the fact — which is
+exactly the skewed-join shape.
 """
 
 from __future__ import annotations
@@ -14,35 +28,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def salted_join(fact: DataFrame, dim: DataFrame, key: str, *,
-                salt_buckets: int = 16, how: str = "inner") -> DataFrame:
-    """Skew-resistant equi-join: the fact side gets a random-ish but
-    DETERMINISTIC salt (hash of the whole row's key + a row id would
-    need state; xxhash64 of monotonically varying columns suffices —
-    we use the key plus spark_partition_id, which spreads a hot key
-    across ``salt_buckets`` reducers), the dim side is exploded
-    ``salt_buckets``× so every salted fact row still finds its match.
+def salted_join(fact: DataFrame, dim: DataFrame, on: list[str] | str,
+                *, how: str = "inner", salt: int = 8) -> DataFrame:
+    """Exact equi-join with the fact side salted ``salt`` ways.
 
-    Cost model: dim side inflates by salt_buckets (fine for dims; never
-    salt two big sides — pre-aggregate instead), fact side shuffles
-    once on (key, salt) instead of once on key, and no single reducer
-    receives a hot key's full volume.
-
-    Only inner/left are supported: with right/full_outer, unmatched
-    dim rows would surface once per salt replica (salt_buckets copies).
-    """
-    if how not in ("inner", "left", "leftouter", "left_outer"):
+    ``how`` is restricted to joins that preserve the fact side
+    ('inner', 'left'/'left_outer', 'left_semi', 'left_anti'):
+    dimension-preserving joins would multiply unmatched dimension
+    rows by ``salt``.
+    The salt is seeded-random per fact row, so a hot key spreads over
+    all ``salt`` buckets however few input partitions hold it. It only
+    routes rows to shuffle partitions and is dropped before returning,
+    so results are unaffected by the draw."""
+    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
         raise ValueError(
-            f"salted_join supports how='inner'/'left' only, got {how!r}: "
-            "the dim side is exploded per salt bucket, so right/full "
-            "outer joins would emit unmatched dim rows salt_buckets times"
+            f"salted_join supports fact-preserving joins only, got {how!r}"
         )
-    salt = F.pmod(F.xxhash64(F.col(key), F.spark_partition_id()), F.lit(salt_buckets))
-    fact_salted = fact.withColumn("__salt", salt.cast("int"))
-    dim_exploded = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+    keys = [on] if isinstance(on, str) else list(on)
+    salted_fact = fact.withColumn("__salt", (F.rand(42) * salt).cast("int"))
+    replicated_dim = dim.withColumn(
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    out = fact_salted.join(dim_exploded, [key, "__salt"], how)
+    out = salted_fact.join(replicated_dim, keys + ["__salt"], how)
     return out.drop("__salt")
 
 
@@ -118,15 +125,14 @@ def adaptive_buckets(n_rows: int, target_rows_per_bucket: int = 4_000_000,
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, *,
-                   num_buckets: int = 32, sort_by: str | None = None) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join
-    key. Two tables bucketed the same way equi-join WITHOUT a shuffle
-    (and without even a sort, when sorted) — the bucketing IS the
-    exchange, paid once at write time instead of per query."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table)
+                   num_buckets: int = 32) -> None:
+    """Persist a table bucketed by its join key. Two tables bucketed
+    the same way equi-join WITHOUT a shuffle (SortMergeJoin reads
+    bucket i against bucket i) — the bucketing IS the exchange, paid
+    once at write time instead of per query. Bucket metadata requires
+    the table catalog, hence saveAsTable."""
+    (df.write.mode("overwrite").format("parquet")
+     .bucketBy(num_buckets, key).saveAsTable(table))
 
 
 def reap_bucketed_tables(spark, prefix: str | tuple[str, ...] =
@@ -217,7 +223,7 @@ def zorder_layout(df: DataFrame, cols: list[str], path: str, *,
     are interleaved with JVM shift/or expressions (pure codegen, no
     UDF), and the write is range-partitioned + sorted by the z-value.
     At 100 TB you apply this per partition directory as a maintenance
-    job, same cadence as compact_parquet.
+    job, same cadence as sinks.writers.compact_parquet.
     """
     stats = df.agg(
         *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
@@ -250,44 +256,3 @@ def zorder_layout(df: DataFrame, cols: list[str], path: str, *,
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def compact_parquet(spark, src_dir: str, dst_dir: str, *,
-                    target_file_bytes: int = 128 << 20) -> int:
-    """Small-files compaction (the maintenance job every long-lived
-    100 TB table needs): size the output file count from the source's
-    ON-DISK bytes and rewrite with one round-robin repartition —
-    turning a directory of streaming-micro-batch or per-task shards
-    into ~target-sized parquet files that scan with full parallelism
-    and sane footer overhead.
-
-    The byte census is a driver-side METADATA walk through the Hadoop
-    FileSystem client — the same listing the parquet reader already
-    performs, never a data read — so it is scheme-correct on hdfs://,
-    s3a://, and file: alike (an os.walk census silently returns 0 on
-    any non-local filesystem → repartition(1) → a single-file rewrite
-    of the whole table; r7 advisor finding). Raises on a missing
-    source dir instead of quietly compacting nothing. Returns the
-    chosen file count. Run per partition directory on a partitioned
-    table, the same cadence as zorder_layout."""
-    import math
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(src_dir)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        raise FileNotFoundError(f"compact_parquet: no such dir {src_dir!r}")
-    total = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            total += st.getLen()
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    (
-        spark.read.parquet(src_dir)
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(dst_dir)
-    )
-    return n_files

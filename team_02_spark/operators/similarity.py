@@ -101,13 +101,6 @@ def knn_bruteforce(queries: DataFrame, corpus: DataFrame, k: int,
     )
 
 
-def _hyperplane_bucket(vec_col: str, dim: int, num_planes: int, seed: int) -> F.Column:
-    """Sign-bit bucket id from fixed pseudo-random hyperplanes (seeded
-    on the driver, deterministic). One Arrow-batched matmul per batch —
-    see functions.vectors.hyperplane_bucket."""
-    return hyperplane_bucket(vec_col, dim, num_planes, seed)
-
-
 def knn_lsh(queries: DataFrame, corpus: DataFrame, k: int, *,
             q_id: str = "q_id", c_id: str = "vec_id",
             q_vec: str = "q_vec", c_vec: str = "embedding",
@@ -198,7 +191,7 @@ def knn_lsh(queries: DataFrame, corpus: DataFrame, k: int, *,
             corpus.count(), target_bucket_size, lo=8, hi=24
         )
     c_bucket = corpus.withColumn(
-        "__bucket", _hyperplane_bucket(c_vec, dim, num_planes, seed)
+        "__bucket", hyperplane_bucket(c_vec, dim, num_planes, seed)
     )
     hot = None
     if bucket_cap is not None:
@@ -211,13 +204,13 @@ def knn_lsh(queries: DataFrame, corpus: DataFrame, k: int, *,
         # negative refined space using 8 independent-seed sign bits.
         # Queries apply the SAME transform below with their own
         # vector's refine bits.
-        c_refine = _hyperplane_bucket(c_vec, dim, 8, seed + 10_007)
+        c_refine = hyperplane_bucket(c_vec, dim, 8, seed + 10_007)
         c_bucket = remap_hot_buckets(
             c_bucket, hot, bucket_col="__bucket", refine=c_refine,
             join_keys="__bucket",
         )
     q_sig = queries.withColumn(
-        "__b0", _hyperplane_bucket(q_vec, dim, num_planes, seed)
+        "__b0", hyperplane_bucket(q_vec, dim, num_planes, seed)
     )
     # Validate the ARGUMENT, not the post-override depth (r10 advisor
     # low): multi_probe=False must coerce a VALID depth to 0, not
@@ -244,7 +237,7 @@ def knn_lsh(queries: DataFrame, corpus: DataFrame, k: int, *,
         *[F.col(c) for c in queries.columns], F.explode(probes).alias("__bucket")
     )
     if hot is not None:
-        q_refine = _hyperplane_bucket(q_vec, dim, 8, seed + 10_007)
+        q_refine = hyperplane_bucket(q_vec, dim, 8, seed + 10_007)
         q_bucket = remap_hot_buckets(
             q_bucket, hot, bucket_col="__bucket", refine=q_refine,
             join_keys="__bucket",
@@ -542,17 +535,6 @@ def _lloyd(x: "np.ndarray", k: int, seed: int, iters: int = 10) -> "np.ndarray":
                 cent[j] = x[far]
                 picked[far] = -np.inf
     return cent
-
-
-def _sub_l2(vec_col: str, j: int, dsub: int, centroid: list[float]) -> F.Column:
-    """Squared L2 distance between subvector j of ``vec_col`` and a
-    centroid literal — pure JVM fold, squares written as x*x."""
-    diff = F.zip_with(
-        F.slice(F.col(vec_col), j * dsub + 1, dsub),
-        F.array(*[F.lit(x) for x in centroid]),
-        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def pq_encode(df: DataFrame, codebooks: list[list[list[float]]], *,

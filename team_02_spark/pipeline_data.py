@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from team_02_spark.functions.text import lang_id, quality_score, token_count
 from team_02_spark.operators.dedup import near_dedup_minhash
-from team_02_spark.sinks import write_partitioned_parquet
 
 
 def curate(docs: DataFrame, *, languages: tuple[str, ...] = ("en",),
@@ -54,13 +53,4 @@ def curate(docs: DataFrame, *, languages: tuple[str, ...] = ("en",),
         )
     else:
         survivors = exact
-    return survivors
-
-
-def curate_and_shard(docs: DataFrame, out_path: str, *,
-                     shard_by: str = "lang", **curate_kwargs) -> DataFrame:
-    """Curate then land as a partitioned corpus (the layout downstream
-    tokenizer jobs partition-prune)."""
-    survivors = curate(docs, **curate_kwargs)
-    write_partitioned_parquet(survivors, out_path, [shard_by])
     return survivors

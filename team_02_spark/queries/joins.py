@@ -179,13 +179,13 @@ def q_join_range(spark, sf_dir):
 )
 def q_join_salted(spark, sf_dir):
     """Skew lane: the orders->customer join executed through
-    operators.skew.salted_join (fact side salted 8 ways, dimension
+    operators.scale.salted_join (fact side salted 8 ways, dimension
     replicated) — the explicit remedy when one key holds enough of a
     100 TB fact table that even AQE's skew-split leaves a single key
     group too big for an executor. Salting is routing only: the
     aggregate equals the plain join's, which is exactly what the
     oracle checks."""
-    from team_02_spark.operators.skew import salted_join
+    from team_02_spark.operators.scale import salted_join
 
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")

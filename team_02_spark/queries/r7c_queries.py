@@ -273,20 +273,20 @@ def q_neighbor_degree(spark, sf_dir):
 def q_compact_files(spark, sf_dir):
     """Small-files compaction round trip: fragment the documents
     table into 64 shard files (the streaming-micro-batch pathology),
-    run operators.scale.compact_parquet to rewrite it at a target
+    run sinks.writers.compact_parquet to rewrite it at a target
     file size, and prove the compacted copy is byte-equivalent by
     auditing it against the source's own aggregate — the oracle reads
     the ORIGINAL table, so any row lost or duplicated in the
     fragment→compact→scan cycle hash-mismatches. Scratch dirs are
     per-application (run_dir). The test layer additionally pins that
     the file count actually shrank."""
-    from team_02_spark.operators.scale import compact_parquet
+    from team_02_spark.sinks.writers import compact_parquet
 
     docs = t(spark, sf_dir, "documents")
     frag = run_dir(spark, "compact_src")
     out = run_dir(spark, "compact_dst")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
-    compact_parquet(spark, frag, out, target_file_bytes=64 << 20)
+    compact_parquet(spark, frag, out_path=out, target_file_bytes=64 << 20)
     back = spark.read.parquet(out)
     return back.agg(
         F.count("*").cast("bigint").alias("n_docs"),

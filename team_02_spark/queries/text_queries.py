@@ -213,9 +213,7 @@ def q_doc_fingerprint(spark, sf_dir):
     """Text-analysis: per-document content fingerprint — md5 digest
     plus hex char-length suffix, both engine-portable (oracle-checked;
     was rows-only while the fingerprint used xxhash64, which DuckDB
-    lacks). The xxhash64 winnowing-flavor variant remains the library
-    scale path (functions/text.py::doc_fingerprint — cheaper per byte,
-    property-tested for repartition stability)."""
+    lacks)."""
     docs = t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",

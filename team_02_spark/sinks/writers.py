@@ -91,23 +91,29 @@ def write_mongodb(df: DataFrame, *, database: str, collection: str,
 
 
 def compact_parquet(spark, path: str, *, target_file_bytes: int = 128 * 1024 * 1024,
-                    out_path: str | None = None) -> int:
+                    out_path: str) -> int:
     """Small-file compaction — the table-maintenance op every parquet
     lake needs: streaming/append sinks accumulate thousands of tiny
     files, and scan parallelism + footer overhead degrade until
     someone rewrites them at a sane target size.
 
-    Sizes the output file count from the ACTUAL on-disk byte size
-    (Hadoop FS metadata — no data read), rewrites with a round-robin
-    ``repartition(n)`` (an explicit shuffle, which is the point: it
-    rebalances skewed tiny files into uniform outputs), and writes to
-    ``out_path`` (default: atomically alongside as ``<path>__compact``
-    — callers swap directories; this helper never deletes the input).
+    Sizes the output file count from the ACTUAL on-disk byte size and
+    rewrites with a round-robin ``repartition(n)`` (an explicit
+    shuffle, which is the point: it rebalances skewed tiny files into
+    uniform outputs) to ``out_path`` — callers swap directories; this
+    helper never deletes the input.
+
+    The byte census is a driver-side METADATA call through the Hadoop
+    FileSystem client — never a data read — so it is scheme-correct on
+    hdfs://, s3a://, and file: alike (an os.walk census silently
+    returns 0 on any non-local filesystem → repartition(1) → a
+    single-file rewrite of the whole table). Raises FileNotFoundError
+    on a missing source instead of quietly compacting nothing.
 
     Returns the number of output files chosen. At cluster scale this
     is the per-partition maintenance job you schedule after each
     ingest window (pair with write_partitioned_parquet and run per
-    partition directory).
+    partition directory, the same cadence as zorder_layout).
     """
     import math
 
@@ -115,13 +121,15 @@ def compact_parquet(spark, path: str, *, target_file_bytes: int = 128 * 1024 * 1
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(hconf)
+    if not fs.exists(jpath):
+        raise FileNotFoundError(f"compact_parquet: no such dir {path!r}")
     total = fs.getContentSummary(jpath).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
     (
-        df.repartition(n_files)
+        spark.read.parquet(path)
+        .repartition(n_files)
         .write.mode("overwrite")
-        .parquet(out_path or f"{path}__compact")
+        .parquet(out_path)
     )
     return n_files
 
@@ -147,26 +155,6 @@ def read_jsonl(spark, path: str, schema: str | None = None) -> DataFrame:
     if schema is not None:
         r = r.schema(schema)
     return r.json(path)
-
-
-def write_bucketed(df: DataFrame, table: str, *, bucket_cols: list[str] | str,
-                   n_buckets: int, sort_cols: list[str] | str | None = None,
-                   path: str | None = None) -> None:
-    """Bucketed table write — the co-located-join layout: both sides of
-    a recurring large-large equi-join written with the SAME bucket
-    count on the join key join WITHOUT a shuffle (SortMergeJoin reads
-    bucket i against bucket i directly; sortBy additionally removes
-    the per-task sort). At 100 TB this converts the nightly fact-fact
-    join from two full shuffles into a partition-local merge.
-    Bucket metadata requires the table catalog, hence saveAsTable."""
-    bc = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bc)
-    if sort_cols:
-        sc = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        w = w.sortBy(*sc)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
 
 
 def write_training_shards(df: DataFrame, out_dir: str, *,

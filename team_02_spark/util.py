@@ -210,8 +210,11 @@ def knuth_uniform(key):
     (engine-reproducible: DuckDB computes the identical value via
     HUGEINT, see queries/llm_pipeline._U_SQL). ONE definition shared
     by the mixing/sampling gates (q_source_mix, q_temperature_mix,
-    q_shard_plan) and the training-shard writer, so the writer's
-    physical layout can never drift from the planned manifest."""
+    q_shard_plan), operators.relational.weighted_sample_exact and the
+    training-shard writer, so the writer's physical layout can never
+    drift from the planned manifest. decimal(38,0), not bigint:
+    k * 2654435761 overflows int64 for k >= ~3.47e9 (ANSI mode
+    throws) — real territory for 100 TB ids."""
     from pyspark.sql import Column, functions as F
 
     col = F.col(key) if isinstance(key, str) else key

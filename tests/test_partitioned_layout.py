@@ -53,8 +53,10 @@ def test_dynamic_partition_pruning(spark, tmp_path):
 
 def test_compact_parquet_small_files(spark, tmp_path):
     """Compaction sizes outputs from on-disk bytes, preserves content,
-    and never touches the input directory."""
+    never touches the input directory, and refuses a missing source."""
     import os
+
+    import pytest
 
     from team_02_spark.sinks.writers import compact_parquet
 
@@ -69,17 +71,21 @@ def test_compact_parquet_small_files(spark, tmp_path):
         for f in os.listdir(src) if f.endswith(".parquet")
     )
     # target just above half the total → exactly 2 output files
-    n_out = compact_parquet(spark, src, target_file_bytes=(total // 2) + 1)
+    out = str(tmp_path / "compact")
+    n_out = compact_parquet(spark, src, target_file_bytes=(total // 2) + 1,
+                            out_path=out)
     assert n_out == 2
-    out = src + "__compact"
     files = [f for f in os.listdir(out) if f.endswith(".parquet")]
     assert len(files) == 2
     # content identical, input untouched
     assert spark.read.parquet(out).count() == 10_000
     assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 40
 
+    with pytest.raises(FileNotFoundError, match="no such dir"):
+        compact_parquet(spark, str(tmp_path / "missing"), out_path=out)
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
+
+def test_bucketed_join_avoids_shuffle(spark):
     """SMB join on co-bucketed tables: with both sides bucketed 8 ways
     on the join key, the join plan contains NO shuffle exchange —
     the layout property that makes recurring 100 TB fact-fact joins
@@ -90,16 +96,14 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from team_02_spark.sinks.writers import write_bucketed
+    from team_02_spark.operators.scale import write_bucketed
 
     left = spark.range(0, 10000).select(
         F.col("id").alias("k"), (F.col("id") % 97).alias("v1"))
     right = spark.range(0, 10000).select(
         F.col("id").alias("k"), (F.col("id") % 31).alias("v2"))
-    write_bucketed(left, "t_bkt_l", bucket_cols="k", n_buckets=8,
-                   sort_cols="k", path=str(tmp_path / "l"))
-    write_bucketed(right, "t_bkt_r", bucket_cols="k", n_buckets=8,
-                   sort_cols="k", path=str(tmp_path / "r"))
+    write_bucketed(left, "t_bkt_l", "k", num_buckets=8)
+    write_bucketed(right, "t_bkt_r", "k", num_buckets=8)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -16,6 +16,7 @@ from team_02_spark.pipeline import (
     featurize,
     prepare_training_data,
     run_inference_pipeline,
+    run_training_pipeline,
 )
 from tests.conftest import SF_SMOKE
 
@@ -86,6 +87,36 @@ def test_training_pipeline_end_to_end(spark):
             trainers()["logistic_regression"],
         )
         assert metrics["tp"] + metrics["fp"] + metrics["fn"] + metrics["tn"] > 0
+
+
+def test_run_training_pipeline_scores_every_trainer(spark):
+    """The packaged training entry point: one metrics dict per
+    trainers() key, each scored on the whole holdout, and its
+    logistic_regression counts equal the hand-built path's above."""
+    from team_02_spark.ml.models import _to_features
+
+    with tempfile.TemporaryDirectory() as tmp:
+        csv_path = _make_sentiment140_csv(tmp)
+        results = run_training_pipeline(spark, csv_path, per_class=50)
+
+        ready = featurize(prepare_training_data(spark, csv_path, per_class=50)).select(
+            "id", "embedding",
+            F.when(F.col("sentiment") == 4, 1).otherwise(0).alias("y"),
+        )
+        holdout = _to_features(ready, "embedding", "y").randomSplit(
+            [0.8, 0.2], seed=15)[1].count()
+        _m, hand = train_with_tracking(
+            ready, "embedding", "y", "logistic_regression",
+            trainers()["logistic_regression"],
+        )
+
+    assert set(results) == set(trainers())
+    assert holdout > 0
+    for name, m in results.items():
+        assert m["tp"] + m["fp"] + m["fn"] + m["tn"] == holdout, name
+    lr = results["logistic_regression"]
+    assert [lr[k] for k in ("tp", "fp", "fn", "tn")] == \
+        [hand[k] for k in ("tp", "fp", "fn", "tn")]
 
 
 def test_inference_pipeline_end_to_end(spark):

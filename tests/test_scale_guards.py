@@ -477,7 +477,7 @@ def test_salted_join_exact_under_adversarial_skew(spark):
     carries the whole key group."""
     from pyspark.sql import functions as F
 
-    from team_02_spark.operators.skew import salted_join
+    from team_02_spark.operators.scale import salted_join
 
     fact = spark.range(2000).select(
         F.when(F.col("id") < 1800, F.lit(7)).otherwise(F.col("id") % 50)
@@ -501,8 +501,7 @@ def test_salted_join_exact_under_adversarial_skew(spark):
 
 
 def test_salted_join_rejects_dim_preserving_how(spark):
-    import pytest
-    from team_02_spark.operators.skew import salted_join
+    from team_02_spark.operators.scale import salted_join
 
     df = spark.range(1).select(F.col("id").alias("k"))
     with pytest.raises(ValueError, match="fact-preserving"):

@@ -30,7 +30,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(
         description="Per-key bench isolation with bench.py methodology")
     ap.add_argument("keys", nargs="+", help="declared query keys")
-    ap.add_argument("--sf", default="sf0.1")
+    ap.add_argument("--sf", default="sf0.1",
+                    help="fixture name, or an absolute fixture directory")
     ap.add_argument("--runs", type=int, default=3,
                     help="best-of-N runs (0 = explain-only)")
     ap.add_argument("--explain", dest="explain_dir", default=None,
@@ -40,7 +41,7 @@ def main() -> int:
     sf, runs, explain_dir, tag, keys = (
         ns.sf, ns.runs, ns.explain_dir, ns.tag, ns.keys)
 
-    sf_dir = f"/root/testdata/{sf}"
+    sf_dir = os.path.join("/root/testdata", sf)
     from team_02_spark import get_spark
     from team_02_spark.queries import QUERIES
     from team_02_spark.sources import TABLES, load_table

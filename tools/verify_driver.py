@@ -6,6 +6,7 @@ every declared query against its oracle.
 Usage:
     python tools/verify_driver.py                    # all keys, sf0.01
     python tools/verify_driver.py --sf sf0.1         # scale sweep
+        (--sf also takes an absolute fixture directory)
     python tools/verify_driver.py q_pagerank q_auc   # subset
     python tools/verify_driver.py --window           # the projected
         50-key driver window (red + pinned + new + stalest), the end-of-round
@@ -53,7 +54,7 @@ def main() -> int:
         import __spark_entry__ as e
 
         args += list(e.queries())[:50]
-    sf_dir = f"/root/testdata/{sf}"
+    sf_dir = os.path.join("/root/testdata", sf)
 
     import duckdb
     from pyspark.sql import SparkSession
