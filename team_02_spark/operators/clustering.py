@@ -114,14 +114,15 @@ def _tag(qdf: DataFrame, gathered: DataFrame) -> DataFrame:
     )
 
 
-def _update(tag: DataFrame) -> DataFrame:
-    """Recompute centroids from a tagged frame (``cluster`` is a
-    map-side column on the quantized rows — no join needed): exact
-    BIGINT component sums, then one double divide + FLOOR per
-    component (see module docstring for why not integer div)."""
+def _update(tag: DataFrame, *keys: str) -> DataFrame:
+    """Recompute one centroid per ``keys`` group from a tagged frame
+    (the keys are map-side columns on the quantized rows — no join
+    needed): exact BIGINT component sums, then one double divide +
+    FLOOR per component (see module docstring for why not integer
+    div). Returns ``(*keys, __c)``."""
     ex = (
-        tag.select("cluster", F.posexplode("__q").alias("pos", "v"))
-        .groupBy("cluster", "pos")
+        tag.select(*keys, F.posexplode("__q").alias("pos", "v"))
+        .groupBy(*keys, "pos")
         .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
     )
     return (
@@ -130,14 +131,13 @@ def _update(tag: DataFrame) -> DataFrame:
             F.floor(F.col("s").cast("double") / F.col("n").cast("double"))
             .cast("long"),
         )
-        .groupBy("cluster")
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "c"))),
                 lambda st: st.getField("c"),
             ).alias("__c")
         )
-        .select(F.col("cluster").alias("cid"), "__c")
     )
 
 
@@ -274,7 +274,9 @@ def kmeans_assign(df: DataFrame, vec_col: str = "embedding",
     # (k·d output rows), and the final assignment never shuffles.
     tag = _tag(qdf, _gather(cents))
     for _ in range(iters - 1):
-        cents = _update(tag)
+        cents = _update(tag, "cluster").select(
+            F.col("cluster").alias("cid"), "__c"
+        )
         tag = _tag(qdf, _gather(cents))
     if _return_tag:
         return tag  # (id_col, __q, *keep, cluster) — twolevel caller
@@ -322,31 +324,6 @@ def _fine_tag(pts: DataFrame, gathered: DataFrame) -> DataFrame:
             ).getField("fcid"),
         )
         .drop("__fcents")
-    )
-
-
-def _fine_update(tag: DataFrame) -> DataFrame:
-    """Per-(cell, fine-id) centroid rebuild — the _update arithmetic
-    keyed by the composite (coarse, fine) cluster; ``fcid`` is a
-    map-side column on the tagged rows, so no join is needed."""
-    ex = (
-        tag.select("__cc", "fcid", F.posexplode("__q").alias("pos", "v"))
-        .groupBy("__cc", "fcid", "pos")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-    )
-    return (
-        ex.withColumn(
-            "c",
-            F.floor(F.col("s").cast("double") / F.col("n").cast("double"))
-            .cast("long"),
-        )
-        .groupBy("__cc", "fcid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda st: st.getField("c"),
-            ).alias("__c")
-        )
     )
 
 
@@ -482,7 +459,7 @@ def kmeans_assign_twolevel(df: DataFrame, vec_col: str = "embedding",
     )
     tag = _fine_tag(pts, _fine_gather(seeds))
     for _ in range(iters - 1):
-        cents = _fine_update(tag)
+        cents = _update(tag, "__cc", "fcid")  # per-(cell, fine-id)
         tag = _fine_tag(pts, _fine_gather(cents))
     return tag.select(
         F.col(id_col),

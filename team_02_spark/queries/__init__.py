@@ -32,11 +32,7 @@ from team_02_spark.queries import behavior  # noqa: E402,F401
 from team_02_spark.queries import retail  # noqa: E402,F401
 from team_02_spark.queries import hybrid  # noqa: E402,F401
 from team_02_spark.queries import stats_queries  # noqa: E402,F401
-from team_02_spark.queries import r7_queries  # noqa: E402,F401
-from team_02_spark.queries import r7b_queries  # noqa: E402,F401
-from team_02_spark.queries import r7c_queries  # noqa: E402,F401
-from team_02_spark.queries import r8_queries  # noqa: E402,F401
-from team_02_spark.queries import r9_queries  # noqa: E402,F401
+from team_02_spark.queries import storage  # noqa: E402,F401
 from team_02_spark.queries import tpch_partsupp  # noqa: E402,F401
 
 __all__ = ["QUERIES", "query"]

@@ -37,6 +37,11 @@ def davg_sql(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS {DEC_SQL})) AS DOUBLE) / COUNT({expr})"
 
 
+def to_cents(col: str) -> Column:
+    """2dp-valued double -> exact BIGINT cents (FIXTURES.md §C)."""
+    return (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 

@@ -1,5 +1,7 @@
 """Aggregation queries (SURVEY.md §2.5): group-by, count-distinct,
-rollup/cube, confusion matrix.
+rollup/cube, confusion matrix, percentiles, the salted two-stage
+(skew-proof) group-by, largest-remainder apportionment, and a
+cogrouped applyInPandas fold.
 
 Spark plans every groupBy as partial (map-side) + final hash
 aggregation automatically; the decimal-sum discipline (see _util) makes
@@ -8,6 +10,7 @@ double sums independent of that partial/final split order.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from team_02_spark.queries.registry import query
@@ -246,3 +249,160 @@ def q_bitmap_distinct(spark, sf_dir):
         keys=["event_type"], value="user_id",
     )
     return merge_bitmaps(shards, keys=["event_type"])
+
+
+@query(
+    "q_twostage_agg",
+    oracle=f"""
+    SELECT l_returnflag,
+           COUNT(*) AS n_rows,
+           CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS cents
+    FROM lineitem GROUP BY l_returnflag
+    """,
+)
+def q_twostage_agg(spark, sf_dir):
+    """Salted two-stage aggregation — the skew-proof group-by: stage 1
+    aggregates on (key, salt) so a hot key spreads over 8 reducers,
+    stage 2 merges the 8 partials per key. The result is exactly the
+    plain group-by (the oracle), the plan is two small exchanges
+    instead of one skewed one. Counts and integer cents merge
+    losslessly across stages (any associative agg does)."""
+    li = t(spark, sf_dir, "lineitem")
+    cents = (
+        F.col("l_extendedprice").cast("decimal(18,2)") * 100
+    ).cast("bigint")
+    stage1 = (
+        li.select(
+            "l_returnflag",
+            (F.col("l_orderkey") % 8).alias("__salt"),
+            cents.alias("cents"),
+        )
+        .groupBy("l_returnflag", "__salt")
+        .agg(F.count("*").alias("pn"), F.sum("cents").alias("pc"))
+    )
+    return stage1.groupBy("l_returnflag").agg(
+        F.sum("pn").cast("bigint").alias("n_rows"),
+        F.sum("pc").cast("bigint").alias("cents"),
+    )
+
+
+@query(
+    "q_cogroup_pandas",
+    oracle="""
+    SELECT c.c_custkey,
+           COUNT(o.o_orderkey) AS n_orders,
+           COALESCE(CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100
+                                  AS BIGINT)) AS BIGINT), 0) AS order_cents,
+           CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+               AS acctbal_cents
+    FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+    GROUP BY c.c_custkey, c.c_acctbal
+    """,
+)
+def q_cogroup_pandas(spark, sf_dir):
+    """U-surface breadth: cogrouped applyInPandas — customer and
+    orders cogrouped on custkey, one Arrow batch pair per key group,
+    the escape hatch for per-entity logic no join/agg expresses
+    (sequence alignment, per-entity model scoring). Here the pandas fn
+    computes an SQL-checkable aggregate so the oracle can verify the
+    cogroup plumbing end-to-end. Exact integer cents via rint (prices
+    are 2dp-valued doubles, so rint lands the same integer as the
+    engines' decimal cast)."""
+    import pandas as pd
+
+    cust = t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    orders = t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+
+    def fold(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
+
+        if len(left):
+            key = int(left["c_custkey"].iloc[0])
+            bal = int(np.rint(float(left["c_acctbal"].iloc[0]) * 100))
+        else:  # order referencing an absent customer: not in fixtures,
+            return pd.DataFrame(  # but the seam stays total
+                columns=["c_custkey", "n_orders", "order_cents",
+                         "acctbal_cents"]
+            )
+        cents = np.rint(right["o_totalprice"].to_numpy(dtype="float64")
+                        * 100).astype("int64")
+        return pd.DataFrame({
+            "c_custkey": [key],
+            "n_orders": [int(len(right))],
+            "order_cents": [int(cents.sum())],
+            "acctbal_cents": [bal],
+        })
+
+    return (
+        cust.groupBy("c_custkey")
+        .cogroup(orders.groupBy("o_custkey"))
+        .applyInPandas(
+            fold,
+            schema=("c_custkey long, n_orders long, order_cents long, "
+                    "acctbal_cents long"),
+        )
+    )
+
+
+@query(
+    "q_allocation",
+    oracle="""
+    WITH cnt AS (
+      SELECT source, CAST(SUM(n_chars) AS BIGINT) AS w, COUNT(*) AS n
+      FROM documents GROUP BY source
+    ),
+    tot AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM cnt),
+    shares AS (
+      SELECT source, n, (w * 1000) // tw AS base, (w * 1000) % tw AS rem
+      FROM cnt, tot
+    ),
+    ranked AS (
+      SELECT source, n, base, rem,
+             ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rk
+      FROM shares
+    ),
+    spent AS (SELECT CAST(SUM(base) AS BIGINT) AS used FROM ranked)
+    SELECT source, CAST(n AS BIGINT) AS n_docs,
+           CAST(base + CASE WHEN rk <= 1000 - used THEN 1 ELSE 0 END AS BIGINT)
+             AS slots
+    FROM ranked, spent
+    """,
+)
+def q_allocation(spark, sf_dir):
+    """Largest-remainder (Hamilton) apportionment: split EXACTLY 1000
+    sample slots across document sources proportional to character
+    volume — floor shares from integer division, then the leftover
+    slots go to the largest fractional remainders (ties broken by
+    source name). The exact-N guarantee is what proportional
+    samplers (q_token_budget_sample's quota stage, shard planners)
+    need and per-group rounding can't give. Pure integer arithmetic
+    end to end — no floats to disagree on. At 100 TB: one corpus
+    aggregate to the source-cardinality table, then all windowing
+    runs on that tiny table (documented single-partition window over
+    |sources| rows); the global totals ride broadcast 1-row
+    cross joins, the same shape as BM25's corpus stats."""
+    docs = t(spark, sf_dir, "documents")
+    cnt = docs.groupBy("source").agg(
+        F.sum("n_chars").cast("bigint").alias("w"), F.count("*").alias("n")
+    )
+    tot = cnt.agg(F.sum("w").cast("bigint").alias("tw"))
+    shares = cnt.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "n",
+        F.expr("(w * 1000) div tw").alias("base"),
+        ((F.col("w") * 1000) % F.col("tw")).alias("rem"),
+    )
+    rk = F.row_number().over(Window.orderBy(F.col("rem").desc(), "source"))
+    ranked = shares.select("source", "n", "base", rk.alias("rk"))
+    spent = ranked.agg(F.sum("base").cast("bigint").alias("used"))
+    return ranked.crossJoin(F.broadcast(spent)).select(
+        "source",
+        F.col("n").cast("bigint").alias("n_docs"),
+        (
+            F.col("base")
+            + F.when(F.col("rk") <= 1000 - F.col("used"), 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("slots"),
+    )

@@ -9,7 +9,8 @@ pair contributes both directions to the edge list.
 
 The dedup lane already carries the other classic (connected
 components via min-label propagation, operators/dedup.py); this adds
-degree-distribution analytics and a fixed-iteration PageRank whose
+degree-distribution and degree-assortativity analytics, bounded BFS
+shortest paths, triangle counts, and a fixed-iteration PageRank whose
 DuckDB oracle is the same computation unrolled as CTEs — rank state
 is fixed-point bigint (1e-9 units, integer DIV), so the iterated
 state is bit-identical across engines by construction (FIXTURES.md
@@ -431,4 +432,98 @@ def q_triangles_approx(spark, sf_dir):
         F.col("n_edges").alias("n_sampled_edges"),
     ).crossJoin(
         pairs.agg(F.count("*").cast("bigint").alias("n_edges_total"))
+    )
+
+
+@query(
+    "q_shortest_path",
+    oracle="""
+    WITH RECURSIVE pairs AS (
+      SELECT DISTINCT 'c' || o.o_custkey AS c_node, 's' || l.l_suppkey AS s_node
+      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    ),
+    edges AS (
+      SELECT c_node AS src, s_node AS dst FROM pairs
+      UNION ALL SELECT s_node, c_node FROM pairs
+    ),
+    bfs(node, dist) AS (
+      SELECT 'c1' AS node, 0 AS dist
+      UNION
+      SELECT e.dst, b.dist + 1 FROM bfs b JOIN edges e ON e.src = b.node
+      WHERE b.dist < 4
+    )
+    SELECT node, CAST(MIN(dist) AS INT) AS dist FROM bfs GROUP BY node
+    """,
+)
+def q_shortest_path(spark, sf_dir):
+    """Single-source BFS hop distances over the customer↔supplier
+    bipartite graph (graph.py's edge list), bounded at 4 hops — the
+    recursive-CTE query shape Spark has no native operator for,
+    expressed the scale-correct way: each round is ONE equi-join of
+    the current frontier against the edge list plus an anti-join
+    that shrinks the frontier to first-time nodes (so work per round
+    is proportional to the NEW frontier, not the visited set — the
+    textbook distributed BFS). The DuckDB oracle is the identical
+    computation as a recursive CTE with UNION (distinct) recursion;
+    hop counts are integers, so the iterated state agrees bit-for-bit
+    by construction. At 100 TB: the edge list is the only large
+    shuffled artifact (shared across rounds via shared_pass), frontier
+    frames are node-bounded, and round count is fixed/bounded by
+    graph diameter — the same unrolling contract as q_pagerank."""
+    from team_02_spark.operators.analytics import bfs_distances
+    edges = _edges(spark, sf_dir).transform(shared_pass)
+    return bfs_distances(edges, "c1", max_hops=4)
+
+
+@query(
+    "q_neighbor_degree",
+    oracle="""
+    WITH pairs AS (
+      SELECT DISTINCT 'c' || o.o_custkey AS c_node, 's' || l.l_suppkey AS s_node
+      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    ),
+    edges AS (
+      SELECT c_node AS src, s_node AS dst FROM pairs
+      UNION ALL SELECT s_node, c_node FROM pairs
+    ),
+    deg AS (
+      SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
+      FROM edges GROUP BY src
+    ),
+    e2 AS (
+      SELECT d1.deg AS deg_src, d2.deg AS deg_dst
+      FROM edges e
+      JOIN deg d1 ON e.src = d1.node
+      JOIN deg d2 ON e.dst = d2.node
+    )
+    SELECT deg_src AS degree, CAST(COUNT(*) AS BIGINT) AS n_endpoints,
+           CAST(SUM(deg_dst) AS DOUBLE) / COUNT(*) AS avg_nbr_degree
+    FROM e2 GROUP BY deg_src
+    """,
+)
+def q_neighbor_degree(spark, sf_dir):
+    """Degree assortativity profile (avg neighbor degree per degree
+    class — the knn(k) curve of network science): joins the edge list
+    against the degree table on BOTH endpoints and averages the
+    neighbor's degree within each source-degree class. A falling
+    curve is the disassortative hub-and-spoke signature (expected for
+    this bipartite order-flow graph: high-degree suppliers connect to
+    low-degree customers). Exact: degrees are integer counts, the
+    average one integer-sum division. At 100 TB: degree table is
+    node-sized, the two joins shuffle edge partitions by endpoint —
+    both equi-joins, both AQE-eligible; the final aggregate collapses
+    to the degree-alphabet."""
+    edges = _edges(spark, sf_dir).transform(shared_pass)
+    deg = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("deg"))
+    deg = shared_pass(deg)
+    d1 = deg.select(F.col("src").alias("node"), F.col("deg").alias("deg_src"))
+    d2 = deg.select(F.col("src").alias("node"), F.col("deg").alias("deg_dst"))
+    e2 = (
+        edges.join(d1, edges["src"] == d1["node"])
+        .drop("node")
+        .join(d2, F.col("dst") == d2["node"])
+    )
+    return e2.groupBy(F.col("deg_src").alias("degree")).agg(
+        F.count("*").cast("bigint").alias("n_endpoints"),
+        (F.sum("deg_dst").cast("double") / F.count("*")).alias("avg_nbr_degree"),
     )

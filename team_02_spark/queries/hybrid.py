@@ -32,7 +32,7 @@ from team_02_spark.operators.scale import binned_range_join
 from team_02_spark.queries.registry import query
 from team_02_spark.queries._util import dsum, dsum_sql, t
 from team_02_spark.queries.text_queries import BM25_CTES_SQL, bm25_scores
-from team_02_spark.queries.vector_queries import _COS_SQL
+from team_02_spark.queries.vector_queries import COS_SQL
 
 # RRF constant (Cormack/Clarke/Buettcher 2009): 1/(K + rank).
 _RRF_K = 60
@@ -50,7 +50,7 @@ _LANE_TOPK = 50
         FROM bm25
     ),
     sem_scored AS (
-        SELECT c.vec_id AS doc_id, ROUND({_COS_SQL}, 6) AS score
+        SELECT c.vec_id AS doc_id, ROUND({COS_SQL}, 6) AS score
         FROM embeddings c,
              (SELECT vec_id, embedding FROM embeddings WHERE vec_id = 0) q
         WHERE c.vec_id <> 0

@@ -1,4 +1,6 @@
-"""Join queries (SURVEY.md §2.4): inner/left/multi/semi/anti/range.
+"""Join queries (SURVEY.md §2.4): inner/left/multi/semi/anti/range,
+the salted skew join, a quantile-bucket join against broadcast
+boundaries, and the co-bucketed (zero-Exchange) sort-merge join.
 
 Scale posture: explicit ``F.broadcast`` hints are reserved for sides
 whose cardinality is FIXED regardless of data volume (nation/region,
@@ -13,6 +15,7 @@ with skew splitting — when they don't.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from team_02_spark.queries.registry import query
@@ -194,4 +197,135 @@ def q_join_salted(spark, sf_dir):
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").cast("bigint").alias("n_orders"),
         dsum("o_totalprice").alias("revenue"),
+    )
+
+
+@query(
+    "q_quantile_bucket_join",
+    oracle="""
+    WITH by_price AS (
+        SELECT o_totalprice AS p, COUNT(*) AS cnt FROM orders GROUP BY 1
+    ),
+    cum AS (
+        SELECT p, SUM(cnt) OVER (ORDER BY p) AS cum,
+               SUM(cnt) OVER () AS n
+        FROM by_price
+    ),
+    bounds AS (
+        SELECT MIN(CASE WHEN cum >= GREATEST((n + 1) // 4, 1) THEN p END)
+                   AS q1,
+               MIN(CASE WHEN cum >= GREATEST((n + 1) // 2, 1) THEN p END)
+                   AS q2,
+               MIN(CASE WHEN cum >= GREATEST(3 * (n + 1) // 4, 1) THEN p END)
+                   AS q3
+        FROM cum
+    )
+    SELECT CASE WHEN o_totalprice < b.q1 THEN 'q1'
+                WHEN o_totalprice < b.q2 THEN 'q2'
+                WHEN o_totalprice < b.q3 THEN 'q3'
+                ELSE 'q4' END AS bucket,
+           COUNT(*) AS n_orders,
+           CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT)) AS BIGINT) AS cents
+    FROM orders CROSS JOIN bounds b
+    GROUP BY 1
+    """,
+)
+def q_quantile_bucket_join(spark, sf_dir):
+    """Percentile-bucket join: exact DISCRETE quartile boundaries of
+    order value (rank-select over the DISTINCT-price table, the AUC
+    trick — the cumulative window runs over distinct values, not rows,
+    so the sort input is value-cardinality-sized), broadcast as a
+    1-row frame, then every order CASE-bucketed against them and
+    aggregated per bucket. The discrete boundaries are observed
+    values, so both engines agree exactly."""
+    orders = t(spark, sf_dir, "orders")
+    by_price = orders.groupBy(F.col("o_totalprice").alias("p")).agg(
+        F.count("*").alias("cnt")
+    )
+    cum = by_price.select(
+        "p",
+        F.sum("cnt").over(Window.orderBy("p")).alias("cum"),
+        F.sum("cnt").over(
+            Window.partitionBy()
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("n"),
+    )
+    bounds = cum.agg(
+        F.min(F.when(F.expr("cum >= GREATEST((n + 1) DIV 4, 1)"),
+                     F.col("p"))).alias("q1"),
+        F.min(F.when(F.expr("cum >= GREATEST((n + 1) DIV 2, 1)"),
+                     F.col("p"))).alias("q2"),
+        F.min(F.when(F.expr("cum >= GREATEST(3 * (n + 1) DIV 4, 1)"),
+                     F.col("p"))).alias("q3"),
+    )
+    bucket = (
+        F.when(F.col("o_totalprice") < F.col("q1"), "q1")
+        .when(F.col("o_totalprice") < F.col("q2"), "q2")
+        .when(F.col("o_totalprice") < F.col("q3"), "q3")
+        .otherwise("q4")
+    )
+    cents = (
+        F.col("o_totalprice").cast("decimal(18,2)") * 100
+    ).cast("bigint")
+    return (
+        orders.crossJoin(F.broadcast(bounds))
+        .select(bucket.alias("bucket"), cents.alias("c"))
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n_orders"),
+             F.sum("c").cast("bigint").alias("cents"))
+    )
+
+
+@query(
+    "q_bucketed_join",
+    oracle="""
+    SELECT n.n_name, CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN nation n ON c.c_nationkey = n.n_nationkey
+    GROUP BY n.n_name
+    """,
+)
+def q_bucketed_join(spark, sf_dir):
+    """The pay-the-shuffle-ONCE storage pattern as a correctness
+    lane: both join sides are persisted as co-bucketed catalog tables
+    (16 hash buckets on the join key, paid at write time), then the
+    fact⋈dim equi-join runs with ZERO Exchange operators — Catalyst
+    recognizes the matching bucket layout (test_scale pins the
+    no-shuffle plan property; this lane pins the ANSWER through the
+    bucketed write+read path, which exercises the bucket-pruned
+    reader). Table names are keyed by applicationId so concurrent
+    sessions never collide; overwrite mode keeps re-runs idempotent.
+    Stale per-app dirs from PRIOR sessions are reaped by
+    ``operators.scale.reap_bucketed_tables`` from session teardown —
+    NOT here: a declared query never mutates shared warehouse state
+    as a side effect (r7 verdict #8).
+    At 100 TB this is THE nightly-join optimization: the expensive
+    fact-table exchange happens once per ingest, not once per query."""
+    from team_02_spark.operators.scale import co_located_join, write_bucketed
+
+    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
+    lt, rt = f"b7_orders_{app}", f"b7_cust_{app}"
+    orders = t(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("custkey"), "o_totalprice"
+    )
+    cust = t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("custkey"), "c_nationkey"
+    )
+    write_bucketed(orders, lt, "custkey", num_buckets=16)
+    write_bucketed(cust, rt, "custkey", num_buckets=16)
+    joined = co_located_join(spark, lt, rt, "custkey")
+    nation = t(spark, sf_dir, "nation")
+    return (
+        joined.join(
+            F.broadcast(nation), joined["c_nationkey"] == nation["n_nationkey"]
+        )
+        .groupBy("n_name")
+        .agg(
+            F.count("*").cast("bigint").alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("revenue"),
+        )
     )

@@ -13,8 +13,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from team_02_spark.operators.relational import (
-    dedup_exact,
-    det_order_key,
     deterministic_split,
     stratified_sample_exact,
     union_all,
@@ -239,3 +237,33 @@ def q_sample_weighted(spark, sf_dir):
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return weighted_sample_exact(docs, "n_chars", 25, key="doc_id")
+
+
+@query(
+    "q_sample_systematic",
+    oracle="""
+    WITH ranked AS (
+        SELECT o_custkey, o_orderkey,
+               CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
+                                       ORDER BY o_orderdate, o_orderkey)
+                    AS INT) AS rn
+        FROM orders
+    )
+    SELECT o_custkey, o_orderkey, rn FROM ranked WHERE rn % 5 = 1
+    """,
+)
+def q_sample_systematic(spark, sf_dir):
+    """Systematic (every-Nth) sampling per stratum: order each
+    customer's orders on (date, key) and keep ranks 1, 6, 11, ... —
+    the deterministic complement to the Bernoulli / stratified-exact-N
+    / weighted A-Res lanes. Partition-local windows: no global sort,
+    scales with the stratum count."""
+    orders = t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    return (
+        orders.select(
+            "o_custkey", "o_orderkey",
+            F.row_number().over(w).cast("int").alias("rn"),
+        )
+        .filter(F.col("rn") % 5 == 1)
+    )

@@ -1,19 +1,25 @@
-"""API-surface demonstrations: the engine's queries are DataFrame-
-built throughout, but the same plans are reachable through the two
-other public front doors — `spark.sql()` over registered views, and
-Python UDTFs in a LATERAL join (SURVEY §2.8 U10's table-function
-slot, here as a real `@udtf`, not an explode emulation).
+"""SQL-surface lanes: the SQL constructs beyond plain select / join /
+group-by, each in its DataFrame form against a DuckDB oracle that runs
+the construct verbatim — QUALIFY-filtered windows, LATERAL VIEW OUTER,
+null-safe joins, several COUNT(DISTINCT) in one aggregate, recursive
+CTEs, the multiset set ops (EXCEPT ALL / INTERSECT ALL), and a
+MATCH_RECOGNIZE-style regex over per-user event sequences.
 
-Both are oracle-checked like every other declared query: the front
-door changes, the hash discipline doesn't.
+The engine's queries are DataFrame-built throughout, but the same
+plans are reachable through the two other public front doors —
+`spark.sql()` over registered views, and Python UDTFs in a LATERAL
+join (SURVEY §2.8 U10's table-function slot, here as a real `@udtf`,
+not an explode emulation). Both are oracle-checked like every other
+declared query: the front door changes, the hash discipline doesn't.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from team_02_spark.queries.registry import query
-from team_02_spark.queries._util import t
+from team_02_spark.queries._util import dsum_sql, t
 
 
 @query(
@@ -106,8 +112,6 @@ def q_udtf_bigrams(spark, sf_dir):
         """
     )
 
-
-# ------------------------------------------------- round-4 additions
 
 @query(
     "q_variant_props",
@@ -216,4 +220,265 @@ def q_date_spine_fill(spark, sf_dir):
                CAST(COALESCE(d.rev, 0) AS DOUBLE) AS revenue
         FROM spine s LEFT JOIN daily d ON s.day = d.day
         """
+    )
+
+
+@query(
+    "q_qualify_topn",
+    oracle="""
+    SELECT n.n_name, c.c_custkey, c.c_acctbal,
+           CAST(ROW_NUMBER() OVER (PARTITION BY n.n_name
+                                   ORDER BY c.c_acctbal DESC,
+                                            c.c_custkey) AS INT) AS rnk
+    FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+    QUALIFY rnk <= 3
+    """,
+)
+def q_qualify_topn(spark, sf_dir):
+    """QUALIFY-style filtered window: top-3 customers per nation by
+    account balance, expressed declaratively (window + post-filter —
+    the DataFrame form of DuckDB/Snowflake QUALIFY, which the oracle
+    uses verbatim). Catalyst folds the filter into the window stage;
+    ties break on the key so ranks are total-ordered."""
+    cust = t(spark, sf_dir, "customer")
+    nation = t(spark, sf_dir, "nation")
+    w = Window.partitionBy("n_name").orderBy(
+        F.col("c_acctbal").desc(), "c_custkey"
+    )
+    return (
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
+        .select(
+            "n_name", "c_custkey", "c_acctbal",
+            F.row_number().over(w).cast("int").alias("rnk"),
+        )
+        .filter(F.col("rnk") <= 3)
+    )
+
+
+@query(
+    "q_lateral_outer",
+    oracle="""
+    WITH arr AS (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '),
+                           x -> length(x) >= 8) AS l
+        FROM documents
+    )
+    SELECT doc_id,
+           unnest(CASE WHEN len(l) = 0 THEN [NULL] ELSE l END) AS tok
+    FROM arr
+    """,
+)
+def q_lateral_outer(spark, sf_dir):
+    """LATERAL VIEW OUTER semantics: explode a per-document array of
+    rare (>= 8-char) tokens, KEEPING documents whose array is empty as
+    a NULL row — `explode_outer`, the DataFrame form of
+    `LATERAL VIEW OUTER explode`. The oracle emulates OUTER in DuckDB
+    by substituting [NULL] for empty lists before unnest."""
+    docs = t(spark, sf_dir, "documents")
+    arr = F.filter(
+        F.split(F.col("text"), " "), lambda x: F.length(x) >= 8
+    )
+    return docs.select(
+        "doc_id", F.explode_outer(arr).alias("tok")
+    )
+
+
+@query(
+    "q_null_safe_join",
+    oracle="""
+    WITH lhs AS (
+        SELECT c_custkey, NULLIF(c_mktsegment, 'BUILDING') AS seg
+        FROM customer
+    ),
+    rhs AS (
+        SELECT NULLIF(c_mktsegment, 'BUILDING') AS seg,
+               COUNT(*) AS seg_n
+        FROM customer GROUP BY NULLIF(c_mktsegment, 'BUILDING')
+    )
+    SELECT l.c_custkey, l.seg, r.seg_n
+    FROM lhs l JOIN rhs r ON l.seg IS NOT DISTINCT FROM r.seg
+    """,
+)
+def q_null_safe_join(spark, sf_dir):
+    """Null-safe equi-join (`<=>` / IS NOT DISTINCT FROM): NULL keys
+    match NULL keys instead of dropping, the semantics ETL needs when
+    a sentinel category is nulled out upstream. Still a hash-
+    partitionable equi-join at scale — null-safe equality is a valid
+    shuffle key (all NULLs co-locate)."""
+    cust = t(spark, sf_dir, "customer")
+    seg = F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")).alias("seg")
+    lhs = cust.select("c_custkey", seg)
+    rhs = cust.select(seg).groupBy("seg").agg(F.count("*").alias("seg_n"))
+    return (
+        lhs.alias("l")
+        .join(rhs.alias("r"), F.col("l.seg").eqNullSafe(F.col("r.seg")))
+        .select("c_custkey", "l.seg", "seg_n")
+    )
+
+
+@query(
+    "q_multi_distinct",
+    oracle=f"""
+    SELECT l_returnflag,
+           COUNT(DISTINCT l_partkey) AS nd_part,
+           COUNT(DISTINCT l_suppkey) AS nd_supp,
+           COUNT(DISTINCT l_orderkey) AS nd_order,
+           COUNT(*) AS n_rows,
+           {dsum_sql('l_extendedprice')} AS revenue
+    FROM lineitem GROUP BY l_returnflag
+    """,
+)
+def q_multi_distinct(spark, sf_dir):
+    """Several COUNT(DISTINCT) over different columns in ONE aggregate
+    — Catalyst plans this with a single Expand (one pass over the
+    input fans each row out per distinct-column) instead of N self-
+    joins; the plain count/sum ride along in the same job."""
+    li = t(spark, sf_dir, "lineitem")
+    return li.groupBy("l_returnflag").agg(
+        F.count_distinct("l_partkey").alias("nd_part"),
+        F.count_distinct("l_suppkey").alias("nd_supp"),
+        F.count_distinct("l_orderkey").alias("nd_order"),
+        F.count("*").alias("n_rows"),
+        F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
+        .cast("double").alias("revenue"),
+    )
+
+
+@query(
+    "q_recursive_cte",
+    oracle="""
+    WITH RECURSIVE spine(mon) AS (
+        SELECT DATE '1995-01-01'
+        UNION ALL
+        SELECT CAST(mon + INTERVAL 1 MONTH AS DATE) FROM spine
+        WHERE mon < DATE '2001-12-01'
+    ),
+    rev AS (
+        SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
+               COUNT(*) AS n_orders,
+               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                             AS BIGINT)) AS BIGINT) AS cents
+        FROM orders GROUP BY 1
+    )
+    SELECT s.mon, COALESCE(r.n_orders, 0) AS n_orders,
+           COALESCE(r.cents, 0) AS cents
+    FROM spine s LEFT JOIN rev r ON s.mon = r.mon
+    """,
+)
+def q_recursive_cte(spark, sf_dir):
+    """Recursive CTE (Spark 4 WITH RECURSIVE): generate the 1995-2001
+    month spine recursively, then left-join monthly order revenue so
+    gap months surface as explicit zeros. The recursion is the tiny
+    (84-row) side — the order aggregate stays a distributed group-by
+    and the join broadcasts the spine."""
+    t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v_r7")
+    return spark.sql("""
+        WITH RECURSIVE spine(mon) AS (
+            SELECT DATE '1995-01-01'
+            UNION ALL
+            SELECT CAST(mon + INTERVAL '1' MONTH AS DATE) FROM spine
+            WHERE mon < DATE '2001-12-01'
+        ),
+        rev AS (
+            SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
+                   COUNT(*) AS n_orders,
+                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                                 AS BIGINT)) AS BIGINT) AS cents
+            FROM orders_v_r7 GROUP BY 1
+        )
+        SELECT s.mon, COALESCE(r.n_orders, 0) AS n_orders,
+               COALESCE(r.cents, 0) AS cents
+        FROM spine s LEFT JOIN rev r ON s.mon = r.mon
+    """)
+
+
+@query(
+    "q_except_all",
+    oracle="""
+    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R'
+    EXCEPT ALL
+    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A'
+    """,
+)
+def q_except_all(spark, sf_dir):
+    """Multiset EXCEPT ALL (bag difference — each duplicate survives
+    count_R - count_A times), the ALL-variant the distinct q_except
+    lane doesn't cover. Catalyst plans it as a counted anti-semantics
+    aggregate, one shuffle per side."""
+    li = t(spark, sf_dir, "lineitem")
+    r = li.filter(F.col("l_returnflag") == "R").select("l_partkey")
+    a = li.filter(F.col("l_returnflag") == "A").select("l_partkey")
+    return r.exceptAll(a)
+
+
+@query(
+    "q_intersect_all",
+    oracle="""
+    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R'
+    INTERSECT ALL
+    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A'
+    """,
+)
+def q_intersect_all(spark, sf_dir):
+    """Multiset INTERSECT ALL (bag intersection — min(count_R,
+    count_A) copies per value), completing the set-op family's ALL
+    variants."""
+    li = t(spark, sf_dir, "lineitem")
+    r = li.filter(F.col("l_returnflag") == "R").select("l_partkey")
+    a = li.filter(F.col("l_returnflag") == "A").select("l_partkey")
+    return r.intersectAll(a)
+
+
+@query(
+    "q_match_recognize",
+    oracle="""
+    WITH j AS (
+      SELECT user_id,
+             string_agg(substr(event_type, 1, 1), ''
+                        ORDER BY ts, event_id) AS journey
+      FROM events GROUP BY user_id
+    )
+    SELECT user_id, journey, CAST(LENGTH(journey) AS INT) AS n_events,
+           regexp_matches(journey, 'v[^e]*p') AS matched,
+           regexp_extract(journey, 'v[^e]*p') AS first_span
+    FROM j
+    """,
+)
+def q_match_recognize(spark, sf_dir):
+    """MATCH_RECOGNIZE-style sequence pattern over per-user journeys
+    (the Flink/Trino CEP shape Spark's DataFrame API lacks): encode
+    each user's time-ordered event stream as a compact symbol string
+    (one char per event, tie-broken by event_id), then run the
+    pattern `view (not-error)* purchase` as a regex — `matched` flags
+    conversion-without-error journeys and `first_span` extracts the
+    leftmost witness. Leftmost-greedy semantics agree between Java
+    regex (Spark) and RE2 (DuckDB) for this class of pattern
+    (verified against python re on the fixture). The per-key
+    sequence-fits-in-memory assumption is MATCH_RECOGNIZE's own
+    partition contract; at 100 TB the single shuffle is by user_id
+    and the regex runs JVM-side per aggregated row — no UDF, no
+    driver state."""
+    ev = t(spark, sf_dir, "events")
+    item = F.struct(
+        F.col("ts"), F.col("event_id"), F.substring("event_type", 1, 1).alias("ch")
+    )
+    j = (
+        ev.groupBy("user_id")
+        .agg(
+            F.concat_ws(
+                "",
+                F.transform(
+                    F.array_sort(F.collect_list(item)), lambda x: x["ch"]
+                ),
+            ).alias("journey")
+        )
+    )
+    pat = "v[^e]*p"
+    return j.select(
+        "user_id",
+        "journey",
+        F.length("journey").cast("int").alias("n_events"),
+        F.col("journey").rlike(pat).alias("matched"),
+        F.regexp_extract("journey", pat, 0).alias("first_span"),
     )

@@ -2,7 +2,11 @@
 streaks, churn, Benford digit audit, market concentration (HHI),
 bigram language-model scoring, autocorrelation, Spearman rank
 correlation, chi-square independence cells, per-key mode,
-inter-purchase gaps, and readability scoring.
+inter-purchase gaps, readability scoring, exact moments and
+correlation matrices from integer power sums, rolling correlation,
+IQR outlier fences, experiment readouts (CUPED, difference-in-
+differences) and robust statistics (Theil-Sen, Mann-Whitney U,
+Hodges-Lehmann).
 
 Reference scope: /root/reference/src/main.py only ever counts raw
 events and rows (133-160); these are the statistical audits a
@@ -29,7 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from team_02_spark.queries.registry import query
-from team_02_spark.queries._util import t
+from team_02_spark.queries._util import t, to_cents
 from team_02_spark.util import shared_pass
 
 # Portable epoch-day number: Spark datediff(day, 1970-01-01) ==
@@ -2060,4 +2064,715 @@ def q_conversion_horizons(spark, sf_dir):
         horizon(3_600_000_000, "within_1h_bp"),
         horizon(86_400_000_000, "within_1d_bp"),
         horizon(604_800_000_000, "within_7d_bp"),
+    )
+
+
+@query(
+    "q_moments",
+    oracle="""
+    WITH sums AS (
+        SELECT l_returnflag,
+               COUNT(*) AS n,
+               SUM(CAST(l_quantity AS BIGINT)) AS s1,
+               SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT))
+                   AS s2,
+               SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
+                   * CAST(l_quantity AS BIGINT)) AS s3,
+               SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
+                   * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT))
+                   AS s4
+        FROM lineitem GROUP BY l_returnflag
+    )
+    SELECT l_returnflag, CAST(n AS BIGINT) AS n,
+           ROUND(CAST(s1 AS DOUBLE) / n, 4) AS mean_q,
+           ROUND(CAST(s2 AS DOUBLE) / n
+                 - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n), 4)
+               AS var_q,
+           ROUND((CAST(s3 AS DOUBLE) / n
+                  - 3 * (CAST(s1 AS DOUBLE) / n) * (CAST(s2 AS DOUBLE) / n)
+                  + 2 * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)
+                    * (CAST(s1 AS DOUBLE) / n))
+                 / ((CAST(s2 AS DOUBLE) / n
+                     - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
+                    * SQRT(CAST(s2 AS DOUBLE) / n
+                           - (CAST(s1 AS DOUBLE) / n)
+                             * (CAST(s1 AS DOUBLE) / n))), 4) AS skew_q
+    FROM sums
+    """,
+)
+def q_moments(spark, sf_dir):
+    """Exact higher moments per group (mean / variance / skewness of
+    l_quantity) from raw integer power sums — the column-profiler
+    statistic beyond q_column_stats. Quantities are integral, so the
+    power sums are exact BIGINTs (one map-side-combining aggregate);
+    the moment formulas then run on exact inputs in IEEE doubles —
+    identical text, identical results in both engines (sqrt is
+    correctly rounded; no libm-divergent calls). Engine skewness()
+    builtins disagree on bias correction, which is why the lane
+    derives from sums."""
+    li = t(spark, sf_dir, "lineitem")
+    q = F.col("l_quantity").cast("bigint")
+    sums = li.groupBy("l_returnflag").agg(
+        F.count("*").alias("n"),
+        F.sum(q).alias("s1"),
+        F.sum(q * q).alias("s2"),
+        F.sum(q * q * q).alias("s3"),
+        F.sum(q * q * q * q).alias("s4"),
+    )
+    n = F.col("n")
+    m1 = F.col("s1").cast("double") / n
+    e2 = F.col("s2").cast("double") / n
+    e3 = F.col("s3").cast("double") / n
+    var = e2 - m1 * m1
+    m3c = e3 - 3 * m1 * e2 + 2 * m1 * m1 * m1
+    return sums.select(
+        "l_returnflag",
+        n.cast("bigint").alias("n"),
+        F.round(m1, 4).alias("mean_q"),
+        F.round(var, 4).alias("var_q"),
+        F.round(m3c / (var * F.sqrt(var)), 4).alias("skew_q"),
+    )
+
+
+@query(
+    "q_rolling_corr",
+    oracle="""
+    WITH daily AS (
+        SELECT CAST(l_shipdate AS DATE) AS day,
+               CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                             AS BIGINT)) AS BIGINT) // 100 AS x,
+               CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS y
+        FROM lineitem GROUP BY 1
+    ),
+    win AS (
+        SELECT day,
+               CAST(COUNT(*) OVER w AS BIGINT) AS cnt,
+               CAST(SUM(x) OVER w AS BIGINT) AS sx,
+               CAST(SUM(y) OVER w AS BIGINT) AS sy,
+               CAST(SUM(x * y) OVER w AS BIGINT) AS sxy,
+               CAST(SUM(x * x) OVER w AS BIGINT) AS sxx,
+               CAST(SUM(y * y) OVER w AS BIGINT) AS syy
+        FROM daily
+        WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    )
+    SELECT day,
+           CASE WHEN (cnt * sxx - sx * sx) = 0 OR (cnt * syy - sy * sy) = 0
+                THEN NULL
+                ELSE ROUND(CAST(cnt * sxy - sx * sy AS DOUBLE)
+                           / (SQRT(CAST(cnt * sxx - sx * sx AS DOUBLE))
+                              * SQRT(CAST(cnt * syy - sy * sy AS DOUBLE))), 4)
+           END AS corr7
+    FROM win WHERE cnt = 7
+    """,
+)
+def q_rolling_corr(spark, sf_dir):
+    """7-day rolling Pearson correlation between daily revenue
+    (integer dollars) and daily quantity — exact BIGINT window sums of
+    x, y, xy, x², y² (the co-moment identity), with the only float ops
+    two int->double conversions, two sqrt (correctly rounded), one
+    divide — engine-identical. The window runs over the DAILY table
+    (calendar-bounded, thousands of rows at any corpus size), not over
+    raw lineitems; the daily fold is the only corpus-scale pass."""
+    li = t(spark, sf_dir, "lineitem")
+    cents = (
+        F.col("l_extendedprice").cast("decimal(18,2)") * 100
+    ).cast("bigint")
+    daily = (
+        li.groupBy(F.to_date("l_shipdate").alias("day"))
+        .agg(
+            F.expr(
+                "CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 "
+                "AS BIGINT)) AS BIGINT) DIV 100"
+            ).alias("x"),
+            F.sum(F.col("l_quantity").cast("bigint")).cast("bigint")
+            .alias("y"),
+        )
+    )
+    w = Window.orderBy("day").rowsBetween(-6, 0)
+    win = daily.select(
+        "day",
+        F.count("*").over(w).cast("bigint").alias("cnt"),
+        F.sum("x").over(w).cast("bigint").alias("sx"),
+        F.sum("y").over(w).cast("bigint").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).over(w).cast("bigint").alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).over(w).cast("bigint").alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).over(w).cast("bigint").alias("syy"),
+    )
+    dx = F.col("cnt") * F.col("sxx") - F.col("sx") * F.col("sx")
+    dy = F.col("cnt") * F.col("syy") - F.col("sy") * F.col("sy")
+    num = F.col("cnt") * F.col("sxy") - F.col("sx") * F.col("sy")
+    corr = F.when((dx == 0) | (dy == 0), F.lit(None)).otherwise(
+        F.round(
+            num.cast("double")
+            / (F.sqrt(dx.cast("double")) * F.sqrt(dy.cast("double"))), 4
+        )
+    )
+    return win.filter(F.col("cnt") == 7).select("day", corr.alias("corr7"))
+
+
+@query(
+    "q_iqr_outliers",
+    oracle="""
+    WITH ranked AS (
+        SELECT l_returnflag, l_extendedprice,
+               ROW_NUMBER() OVER (PARTITION BY l_returnflag
+                                  ORDER BY l_extendedprice, l_orderkey,
+                                           l_linenumber) AS rn,
+               COUNT(*) OVER (PARTITION BY l_returnflag) AS n
+        FROM lineitem
+    ),
+    q AS (
+        SELECT l_returnflag,
+               MAX(CASE WHEN rn = GREATEST((n + 1) // 4, 1)
+                        THEN l_extendedprice END) AS q1,
+               MAX(CASE WHEN rn = GREATEST(3 * (n + 1) // 4, 1)
+                        THEN l_extendedprice END) AS q3
+        FROM ranked GROUP BY l_returnflag
+    )
+    SELECT l.l_returnflag, q.q1, q.q3,
+           COUNT(CASE WHEN l.l_extendedprice < q.q1 - 1.5 * (q.q3 - q.q1)
+                        OR l.l_extendedprice > q.q3 + 1.5 * (q.q3 - q.q1)
+                      THEN 1 END) AS n_outliers
+    FROM lineitem l JOIN q ON l.l_returnflag = q.l_returnflag
+    GROUP BY l.l_returnflag, q.q1, q.q3
+    """,
+)
+def q_iqr_outliers(spark, sf_dir):
+    """Tukey-fence outlier audit per group: DISCRETE rank-select
+    quartiles (observed values, never interpolated), 1.5×IQR fences in
+    IEEE arithmetic on those exact observed doubles, outliers counted
+    on a broadcast join-back — the box-plot diagnostic beside the
+    z-score and MAD outlier lanes."""
+    li = t(spark, sf_dir, "lineitem")
+    w = Window.partitionBy("l_returnflag").orderBy(
+        "l_extendedprice", "l_orderkey", "l_linenumber"
+    )
+    wn = Window.partitionBy("l_returnflag")
+    ranked = li.select(
+        "l_returnflag", "l_extendedprice",
+        F.row_number().over(w).alias("rn"),
+        F.count("*").over(wn).alias("n"),
+    )
+    q = ranked.groupBy("l_returnflag").agg(
+        F.max(F.when(F.expr("rn = GREATEST((n + 1) DIV 4, 1)"),
+                     F.col("l_extendedprice"))).alias("q1"),
+        F.max(F.when(F.expr("rn = GREATEST(3 * (n + 1) DIV 4, 1)"),
+                     F.col("l_extendedprice"))).alias("q3"),
+    )
+    iqr = F.col("q3") - F.col("q1")
+    is_out = (
+        (F.col("l_extendedprice") < F.col("q1") - 1.5 * iqr)
+        | (F.col("l_extendedprice") > F.col("q3") + 1.5 * iqr)
+    )
+    return (
+        li.join(F.broadcast(q), "l_returnflag")
+        .groupBy("l_returnflag", "q1", "q3")
+        .agg(F.count(F.when(is_out, 1)).alias("n_outliers"))
+        .select("l_returnflag", "q1", "q3", "n_outliers")
+    )
+
+
+@query(
+    "q_corr_matrix",
+    oracle="""
+    WITH sums AS (
+        SELECT l_returnflag, COUNT(*) AS n,
+               SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                        AS BIGINT) // 100) AS sp,
+               SUM(CAST(l_quantity AS BIGINT)) AS sq,
+               SUM(CAST(CAST(l_discount AS DECIMAL(18,2)) * 100
+                        AS BIGINT)) AS sd,
+               SUM((CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT) // 100)
+                   * (CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                           AS BIGINT) // 100)) AS spp,
+               SUM(CAST(l_quantity AS BIGINT)
+                   * CAST(l_quantity AS BIGINT)) AS sqq,
+               SUM(CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT)
+                   * CAST(CAST(l_discount AS DECIMAL(18,2)) * 100
+                          AS BIGINT)) AS sdd,
+               SUM((CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT) // 100)
+                   * CAST(l_quantity AS BIGINT)) AS spq,
+               SUM((CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+                         AS BIGINT) // 100)
+                   * CAST(CAST(l_discount AS DECIMAL(18,2)) * 100
+                          AS BIGINT)) AS spd,
+               SUM(CAST(l_quantity AS BIGINT)
+                   * CAST(CAST(l_discount AS DECIMAL(18,2)) * 100
+                          AS BIGINT)) AS sqd
+        FROM lineitem GROUP BY l_returnflag
+    )
+    SELECT l_returnflag, CAST(n AS BIGINT) AS n,
+           ROUND((CAST(n AS DOUBLE) * CAST(spq AS DOUBLE)
+                  - CAST(sp AS DOUBLE) * CAST(sq AS DOUBLE))
+                 / (SQRT(CAST(n AS DOUBLE) * CAST(spp AS DOUBLE)
+                         - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE))
+                    * SQRT(CAST(n AS DOUBLE) * CAST(sqq AS DOUBLE)
+                           - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))), 4)
+               AS r_price_qty,
+           ROUND((CAST(n AS DOUBLE) * CAST(spd AS DOUBLE)
+                  - CAST(sp AS DOUBLE) * CAST(sd AS DOUBLE))
+                 / (SQRT(CAST(n AS DOUBLE) * CAST(spp AS DOUBLE)
+                         - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE))
+                    * SQRT(CAST(n AS DOUBLE) * CAST(sdd AS DOUBLE)
+                           - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE))), 4)
+               AS r_price_disc,
+           ROUND((CAST(n AS DOUBLE) * CAST(sqd AS DOUBLE)
+                  - CAST(sq AS DOUBLE) * CAST(sd AS DOUBLE))
+                 / (SQRT(CAST(n AS DOUBLE) * CAST(sqq AS DOUBLE)
+                         - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
+                    * SQRT(CAST(n AS DOUBLE) * CAST(sdd AS DOUBLE)
+                           - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE))), 4)
+               AS r_qty_disc
+    FROM sums
+    """,
+)
+def q_corr_matrix(spark, sf_dir):
+    """Pairwise Pearson correlation matrix (price / quantity /
+    discount) per group from ONE pass of exact integer sufficient
+    statistics — price quantized to integer dollars, discount to
+    integer percent, so every sum and cross-product is an exact BIGINT
+    (bounded to < 2^63 at sf10); the correlation formula then runs on
+    exact inputs in IEEE doubles, identical text both engines.
+    Engine corr() builtins are float-accumulation-order dependent —
+    this lane is not."""
+    li = t(spark, sf_dir, "lineitem")
+    p = F.expr(
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 100"
+    )
+    qy = F.col("l_quantity").cast("bigint")
+    d = (F.col("l_discount").cast("decimal(18,2)") * 100).cast("bigint")
+    sums = li.groupBy("l_returnflag").agg(
+        F.count("*").alias("n"),
+        F.sum(p).alias("sp"), F.sum(qy).alias("sq"), F.sum(d).alias("sd"),
+        F.sum(p * p).alias("spp"), F.sum(qy * qy).alias("sqq"),
+        F.sum(d * d).alias("sdd"),
+        F.sum(p * qy).alias("spq"), F.sum(p * d).alias("spd"),
+        F.sum(qy * d).alias("sqd"),
+    )
+
+    def corr(sxy, sx, sy, sxx, syy):
+        n = F.col("n").cast("double")
+        num = n * F.col(sxy).cast("double") \
+            - F.col(sx).cast("double") * F.col(sy).cast("double")
+        dx = n * F.col(sxx).cast("double") \
+            - F.col(sx).cast("double") * F.col(sx).cast("double")
+        dy = n * F.col(syy).cast("double") \
+            - F.col(sy).cast("double") * F.col(sy).cast("double")
+        return F.round(num / (F.sqrt(dx) * F.sqrt(dy)), 4)
+
+    return sums.select(
+        "l_returnflag",
+        F.col("n").cast("bigint").alias("n"),
+        corr("spq", "sp", "sq", "spp", "sqq").alias("r_price_qty"),
+        corr("spd", "sp", "sd", "spp", "sdd").alias("r_price_disc"),
+        corr("sqd", "sq", "sd", "sqq", "sdd").alias("r_qty_disc"),
+    )
+
+
+# Pre/post boundary of the experiment lanes (q_cuped, q_diff_in_diff):
+# the same fixed mid-month timestamp the drift lanes use. Every mean
+# there is one integer-cents sum / count division, every estimator a
+# fixed IEEE expression over identically-derived doubles, so both
+# engines agree bit-for-bit without a rounding exit.
+_SPLIT = "2024-01-16 00:00:00"
+
+
+@query(
+    "q_cuped",
+    oracle=f"""
+    WITH per_user AS (
+      SELECT user_id, user_id % 2 AS variant,
+             CAST(SUM(CASE WHEN ts < TIMESTAMP '{_SPLIT}'
+                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                  ELSE 0 END) AS BIGINT) AS x,
+             CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_SPLIT}'
+                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                  ELSE 0 END) AS BIGINT) AS y
+      FROM events GROUP BY user_id
+    ),
+    g AS (
+      SELECT COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx,
+             CAST(SUM(y) AS BIGINT) AS sy,
+             CAST(SUM(x*x) AS BIGINT) AS sxx,
+             CAST(SUM(x*y) AS BIGINT) AS sxy
+      FROM per_user
+    ),
+    th AS (
+      SELECT CAST(n*sxy - sx*sy AS DOUBLE)
+               / NULLIF(CAST(n*sxx - sx*sx AS DOUBLE), 0.0) AS theta,
+             CAST(sx AS DOUBLE) / n AS gx
+      FROM g
+    )
+    SELECT variant,
+           CAST(COUNT(*) AS BIGINT) AS n_users,
+           CAST(SUM(y) AS DOUBLE) / COUNT(*) AS mean_post_cents,
+           CAST(SUM(y) AS DOUBLE) / COUNT(*)
+             - th.theta * (CAST(SUM(x) AS DOUBLE) / COUNT(*) - th.gx)
+             AS adj_post_cents
+    FROM per_user, th
+    GROUP BY variant, th.theta, th.gx
+    """,
+)
+def q_cuped(spark, sf_dir):
+    """CUPED variance reduction (Deng et al. 2013, the industry-
+    standard experiment-sensitivity technique): per-user pre-period
+    spend X and post-period spend Y in exact integer cents, pooled
+    theta = cov(X,Y)/var(X) from BIGINT sufficient statistics, and
+    the per-arm adjusted mean Y - theta(X - mean X). Arms are the
+    same user-parity assignment as q_abtest. Determinism: every
+    float is produced by ONE division of exact integers or one
+    fixed multiply/subtract chain over such values — both engines
+    execute the identical IEEE expression. Sufficient-stat overflow
+    bound: |x| ~ per-user cents, n·Σx² must stay under 2^63
+    (~9e18) — holds through sf1000 for 2dp event values; beyond
+    that, lift the sums to DECIMAL(38,0). At 100 TB: one user-keyed
+    aggregate, a 1-row broadcast of (theta, gx), and a 2-row
+    reduction — the corpus is touched once."""
+    ev = t(spark, sf_dir, "events")
+    split = F.lit(_SPLIT).cast("timestamp")
+    per_user = ev.groupBy("user_id").agg(
+        F.sum(F.when(F.col("ts") < split, to_cents("value")).otherwise(0))
+        .cast("bigint")
+        .alias("x"),
+        F.sum(F.when(F.col("ts") >= split, to_cents("value")).otherwise(0))
+        .cast("bigint")
+        .alias("y"),
+    ).select((F.col("user_id") % 2).alias("variant"), "x", "y")
+    per_user = shared_pass(per_user)
+    g = per_user.agg(
+        F.count("*").alias("n"),
+        F.sum("x").cast("bigint").alias("sx"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
+        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
+    )
+    th = g.select(
+        (
+            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+            / F.nullif(
+                (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
+                    "double"
+                ),
+                F.lit(0.0),
+            )
+        ).alias("theta"),
+        (F.col("sx").cast("double") / F.col("n")).alias("gx"),
+    )
+    return (
+        per_user.crossJoin(F.broadcast(th))
+        .groupBy("variant", "theta", "gx")
+        .agg(
+            F.count("*").cast("bigint").alias("n_users"),
+            (F.sum("y").cast("double") / F.count("*")).alias("mean_post_cents"),
+            (
+                F.sum("y").cast("double") / F.count("*")
+                - F.col("theta")
+                * (F.sum("x").cast("double") / F.count("*") - F.col("gx"))
+            ).alias("adj_post_cents"),
+        )
+        .select("variant", "n_users", "mean_post_cents", "adj_post_cents")
+    )
+
+
+@query(
+    "q_diff_in_diff",
+    oracle=f"""
+    WITH cells AS (
+      SELECT user_id % 2 AS treated,
+             CASE WHEN ts < TIMESTAMP '{_SPLIT}' THEN 0 ELSE 1 END AS post,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      FROM events
+    ),
+    m AS (
+      SELECT treated, post,
+             CAST(SUM(cents) AS DOUBLE) / COUNT(*) AS mean_cents
+      FROM cells GROUP BY treated, post
+    )
+    SELECT
+      MAX(CASE WHEN treated=1 AND post=0 THEN mean_cents END) AS t_pre,
+      MAX(CASE WHEN treated=1 AND post=1 THEN mean_cents END) AS t_post,
+      MAX(CASE WHEN treated=0 AND post=0 THEN mean_cents END) AS c_pre,
+      MAX(CASE WHEN treated=0 AND post=1 THEN mean_cents END) AS c_post,
+      (MAX(CASE WHEN treated=1 AND post=1 THEN mean_cents END)
+       - MAX(CASE WHEN treated=1 AND post=0 THEN mean_cents END))
+      - (MAX(CASE WHEN treated=0 AND post=1 THEN mean_cents END)
+         - MAX(CASE WHEN treated=0 AND post=0 THEN mean_cents END))
+        AS did_cents
+    FROM m
+    """,
+)
+def q_diff_in_diff(spark, sf_dir):
+    """Difference-in-differences: the 2×2 (arm × period) cell means
+    of per-event spend in exact integer cents, and the DiD estimate
+    (treated post-pre delta minus control post-pre delta) — the
+    canonical quasi-experimental estimator when assignment isn't
+    randomized over time. One corpus aggregate to 4 cells, then a
+    4-row pivot fold; each mean is one exact-integer division and
+    the estimate a fixed subtraction chain — bit-identical across
+    engines. At 100 TB the only shuffle is the (arm, period) partial
+    aggregate, map-side combined to 4 rows."""
+    ev = t(spark, sf_dir, "events")
+    split = F.lit(_SPLIT).cast("timestamp")
+    cells = ev.select(
+        (F.col("user_id") % 2).alias("treated"),
+        F.when(F.col("ts") < split, 0).otherwise(1).alias("post"),
+        to_cents("value").alias("cents"),
+    )
+    m = cells.groupBy("treated", "post").agg(
+        (F.sum("cents").cast("double") / F.count("*")).alias("mean_cents")
+    )
+
+    def cell(tr: int, po: int):
+        return F.max(
+            F.when(
+                (F.col("treated") == tr) & (F.col("post") == po),
+                F.col("mean_cents"),
+            )
+        )
+
+    return m.agg(
+        cell(1, 0).alias("t_pre"),
+        cell(1, 1).alias("t_post"),
+        cell(0, 0).alias("c_pre"),
+        cell(0, 1).alias("c_post"),
+        ((cell(1, 1) - cell(1, 0)) - (cell(0, 1) - cell(0, 0))).alias(
+            "did_cents"
+        ),
+    )
+
+
+@query(
+    "q_theil_sen",
+    oracle="""
+    WITH daily AS (
+      SELECT date_diff('day', DATE '1990-01-01', CAST(o_orderdate AS DATE))
+               AS t,
+             CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                           AS BIGINT)) AS BIGINT) AS rev
+      FROM orders GROUP BY 1
+    ),
+    sl AS (
+      SELECT CAST(b.rev - a.rev AS DOUBLE) / (b.t - a.t) AS slope,
+             a.t AS t1, b.t AS t2
+      FROM daily a JOIN daily b ON a.t < b.t
+    ),
+    r AS (
+      SELECT slope, ROW_NUMBER() OVER (ORDER BY slope, t1, t2) AS rk,
+             COUNT(*) OVER () AS n
+      FROM sl
+    )
+    SELECT CAST(n AS BIGINT) AS n_pairs, slope AS sen_slope_cents_per_day
+    FROM r WHERE rk = (n + 1) // 2
+    """,
+)
+def q_theil_sen(spark, sf_dir):
+    """Theil-Sen robust trend: the discrete lower-median of all
+    pairwise slopes of the daily-revenue series — the breakdown-
+    point-0.29 alternative to OLS that one bad day can't drag
+    (complements q_linreg_group's closed-form OLS and q_trend).
+    Each slope is ONE double division of exact integer cents and
+    integer day indices, the median a discrete rank-select (never
+    interpolated) with a total-order tie-break — bit-identical
+    across engines. Scale note: the pair table is CALENDAR²-bounded
+    (the daily aggregate collapses the corpus first), so its size is
+    constant in corpus volume — ~2.9 M pairs for seven TPC-H years
+    regardless of SF; the single-partition rank-select sorts that
+    bounded table, same contract as the other global-median lanes."""
+    orders = t(spark, sf_dir, "orders")
+    daily = (
+        orders.groupBy(
+            F.datediff(
+                F.to_date("o_orderdate"), F.lit("1990-01-01").cast("date")
+            ).alias("t")
+        )
+        .agg(F.sum(to_cents("o_totalprice")).cast("bigint").alias("rev"))
+    )
+    daily = shared_pass(daily)
+    a = daily.select(F.col("t").alias("t1"), F.col("rev").alias("r1"))
+    b = daily.select(F.col("t").alias("t2"), F.col("rev").alias("r2"))
+    sl = a.join(b, F.col("t1") < F.col("t2")).select(
+        ((F.col("r2") - F.col("r1")).cast("double") / (F.col("t2") - F.col("t1")))
+        .alias("slope"),
+        "t1",
+        "t2",
+    )
+    w = Window.orderBy("slope", "t1", "t2")
+    r = sl.select(
+        "slope",
+        F.row_number().over(w).alias("rk"),
+        F.count("*").over(Window.partitionBy()).alias("n"),
+    )
+    return r.filter(F.col("rk") == F.expr("(n + 1) div 2")).select(
+        F.col("n").cast("bigint").alias("n_pairs"),
+        F.col("slope").alias("sen_slope_cents_per_day"),
+    )
+
+
+@query(
+    "q_mann_whitney",
+    oracle="""
+    WITH v AS (
+      SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+             user_id % 2 AS grp
+      FROM events
+    ),
+    by_val AS (
+      SELECT cents, CAST(COUNT(*) AS BIGINT) AS cnt,
+             CAST(SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cnt1
+      FROM v GROUP BY cents
+    ),
+    ranked AS (
+      SELECT cents, cnt, cnt1,
+             COALESCE(CAST(SUM(cnt) OVER (ORDER BY cents
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                      AS BIGINT), 0) AS c_before
+      FROM by_val
+    ),
+    tot AS (
+      SELECT CAST(SUM(cnt1) AS BIGINT) AS n1,
+             CAST(SUM(cnt - cnt1) AS BIGINT) AS n2,
+             CAST(SUM((2 * c_before + cnt + 1) * cnt1) AS BIGINT) AS r1_doubled
+      FROM ranked
+    )
+    SELECT n1, n2,
+           CAST(r1_doubled - n1 * (n1 + 1) AS BIGINT) AS u1_doubled,
+           CAST(r1_doubled - n1 * (n1 + 1) AS DOUBLE) / (n1 * n2) - 1.0
+             AS rank_biserial
+    FROM tot
+    """,
+)
+def q_mann_whitney(spark, sf_dir):
+    """Mann-Whitney U (Wilcoxon rank-sum), the nonparametric
+    two-sample test chi-square/KS don't cover: compares spend
+    distributions between the parity arms through ranks, robust to
+    any monotone transform of value. Tie handling is the textbook
+    average-rank scheme kept EXACT by working in doubled ranks
+    (lo+hi is an integer even when the average rank is a half) — the
+    U statistic exits as the integer u1_doubled, cross-checked in
+    tests against an independent python fold; the rank-biserial
+    effect size is one final division. Distribution-by-value first:
+    the corpus collapses to the distinct-cents table (bounded by the
+    value grid, ~5k rows) before any windowing, so the rank pass is
+    alphabet-sized at any corpus scale."""
+    ev = t(spark, sf_dir, "events")
+    v = ev.select(
+        to_cents("value").alias("cents"), (F.col("user_id") % 2).alias("grp")
+    )
+    by_val = v.groupBy("cents").agg(
+        F.count("*").cast("bigint").alias("cnt"),
+        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("cnt1"),
+    )
+    w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
+    ranked = by_val.select(
+        "cnt",
+        "cnt1",
+        F.coalesce(F.sum("cnt").over(w).cast("bigint"), F.lit(0)).alias(
+            "c_before"
+        ),
+    )
+    tot = ranked.agg(
+        F.sum("cnt1").cast("bigint").alias("n1"),
+        F.sum(F.col("cnt") - F.col("cnt1")).cast("bigint").alias("n2"),
+        F.sum((2 * F.col("c_before") + F.col("cnt") + 1) * F.col("cnt1"))
+        .cast("bigint")
+        .alias("r1_doubled"),
+    )
+    return tot.select(
+        "n1",
+        "n2",
+        (F.col("r1_doubled") - F.col("n1") * (F.col("n1") + 1))
+        .cast("bigint")
+        .alias("u1_doubled"),
+        (
+            (F.col("r1_doubled") - F.col("n1") * (F.col("n1") + 1)).cast(
+                "double"
+            )
+            / (F.col("n1") * F.col("n2"))
+            - 1.0
+        ).alias("rank_biserial"),
+    )
+
+
+@query(
+    "q_hodges_lehmann",
+    oracle="""
+    WITH v AS (
+      SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+             user_id % 2 AS grp
+      FROM events
+    ),
+    g1 AS (SELECT cents, CAST(COUNT(*) AS BIGINT) AS c
+           FROM v WHERE grp = 1 GROUP BY cents),
+    g0 AS (SELECT cents, CAST(COUNT(*) AS BIGINT) AS c
+           FROM v WHERE grp = 0 GROUP BY cents),
+    diffs AS (
+      SELECT g1.cents - g0.cents AS d, CAST(SUM(g1.c * g0.c) AS BIGINT) AS w
+      FROM g1, g0 GROUP BY g1.cents - g0.cents
+    ),
+    cum AS (
+      SELECT d, w,
+             CAST(SUM(w) OVER (ORDER BY d
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                  AS BIGINT) AS cw,
+             CAST(SUM(w) OVER () AS BIGINT) AS tot
+      FROM diffs
+    )
+    SELECT CAST(tot AS BIGINT) AS n_pairs, d AS hl_shift_cents
+    FROM cum WHERE 2 * cw >= tot ORDER BY d LIMIT 1
+    """,
+)
+def q_hodges_lehmann(spark, sf_dir):
+    """Hodges-Lehmann shift estimator — the effect-size companion to
+    q_mann_whitney: the median of ALL n1×n2 cross-sample differences
+    (treated minus control spend). The naive form is a quadratic
+    cross join, but because spend lives on the integer-cents grid
+    the computation collapses to the GRID: per-group distinct-value
+    counts, a grid×grid difference table weighted by count products
+    (|grid|² intermediate rows aggregating to the difference
+    alphabet), and a weighted discrete median via cumulative weights
+    (the q_weighted_median 2·cw >= tot rule). All integers end to
+    end. At 100 TB: the corpus collapses to two value-grid tables
+    (~5k rows each) in one aggregate pass; everything after is
+    alphabet-sized regardless of corpus volume — the same trick that
+    keeps q_mann_whitney's rank pass bounded."""
+    ev = t(spark, sf_dir, "events")
+    v = ev.select(
+        to_cents("value").alias("cents"), (F.col("user_id") % 2).alias("grp")
+    )
+    g1 = (
+        v.filter(F.col("grp") == 1)
+        .groupBy("cents")
+        .agg(F.count("*").cast("bigint").alias("c"))
+        .select(F.col("cents").alias("c1"), F.col("c").alias("w1"))
+    )
+    g0 = (
+        v.filter(F.col("grp") == 0)
+        .groupBy("cents")
+        .agg(F.count("*").cast("bigint").alias("c"))
+        .select(F.col("cents").alias("c0"), F.col("c").alias("w0"))
+    )
+    diffs = (
+        g1.crossJoin(g0)
+        .groupBy((F.col("c1") - F.col("c0")).alias("d"))
+        .agg(F.sum(F.col("w1") * F.col("w0")).cast("bigint").alias("w"))
+    )
+    wc = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
+    wt = Window.partitionBy()
+    cum = diffs.select(
+        "d",
+        F.sum("w").over(wc).cast("bigint").alias("cw"),
+        F.sum("w").over(wt).cast("bigint").alias("tot"),
+    )
+    return (
+        cum.filter(2 * F.col("cw") >= F.col("tot"))
+        .orderBy("d")
+        .limit(1)
+        .select(
+            F.col("tot").cast("bigint").alias("n_pairs"),
+            F.col("d").alias("hl_shift_cents"),
+        )
     )

@@ -1,6 +1,9 @@
 """Time-series lane over the events stream-table: OHLC bar resampling,
 rolling exact medians, and EWMA smoothing — the shapes a metrics/
-feature-engineering pipeline runs constantly.
+feature-engineering pipeline runs constantly — plus calendar
+arithmetic on the order dates (business-day lead times, year-over-
+year growth) and sweep-line interval coverage (plain and hot-key
+salted).
 
 Engine discipline notes (FIXTURES.md §C):
 
@@ -439,3 +442,202 @@ def q_mom_growth(spark, sf_dir):
                    "* 10000 DIV LAG(rev_cents) OVER (ORDER BY month)")
         ).cast("bigint").alias("growth_bp"),
     )
+
+
+@query(
+    "q_business_days",
+    oracle="""
+    WITH bd AS (
+        SELECT o.o_orderpriority,
+               (5 * ((date_diff('day', DATE '1970-01-01',
+                                CAST(l.l_shipdate AS DATE)) + 3) // 7)
+                + LEAST((date_diff('day', DATE '1970-01-01',
+                                   CAST(l.l_shipdate AS DATE)) + 3) % 7, 5))
+               - (5 * ((date_diff('day', DATE '1970-01-01',
+                                  CAST(o.o_orderdate AS DATE)) + 3) // 7)
+                  + LEAST((date_diff('day', DATE '1970-01-01',
+                                     CAST(o.o_orderdate AS DATE)) + 3) % 7, 5))
+                   AS bdays
+        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+    )
+    SELECT o_orderpriority,
+           COUNT(*) AS n,
+           CAST(SUM(bdays * 100) AS BIGINT) // COUNT(*) AS avg_bd_e2,
+           CAST(MAX(bdays) AS BIGINT) AS max_bd
+    FROM bd GROUP BY o_orderpriority
+    """,
+)
+def q_business_days(spark, sf_dir):
+    """Business-day (Mon-Fri) lead time between order and ship date —
+    pure integer calendar arithmetic, no engine weekday builtins
+    (their day-numbering conventions differ): with s = epoch_day + 3
+    (so s % 7 == 0 on a Monday), g(d) = 5*(s DIV 7) + LEAST(s%7, 5)
+    counts weekdays before d, and the lead is g(ship) - g(order).
+    Everything is non-negative integer DIV/% — engine-identical."""
+    orders = t(spark, sf_dir, "orders")
+    li = t(spark, sf_dir, "lineitem")
+
+    # build via SQL expr text once — identical arithmetic both engines
+    def g_sql(c):
+        s = f"(datediff(to_date({c}), DATE '1970-01-01') + 3)"
+        return f"(5 * ({s} DIV 7) + LEAST({s} % 7, 5))"
+
+    joined = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
+        "o_orderpriority",
+        F.expr(f"{g_sql('l_shipdate')} - {g_sql('o_orderdate')}")
+        .alias("bdays"),
+    )
+    return joined.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n"),
+        F.expr("CAST(SUM(bdays * 100) AS BIGINT) DIV COUNT(*)")
+        .alias("avg_bd_e2"),
+        F.max("bdays").cast("bigint").alias("max_bd"),
+    )
+
+
+@query(
+    "q_yoy_growth",
+    oracle="""
+    WITH monthly AS (
+        SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
+               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                             AS BIGINT)) AS BIGINT) AS cents
+        FROM orders GROUP BY 1
+    )
+    SELECT mon, cents,
+           CASE WHEN prev IS NULL OR prev = 0 THEN NULL
+                ELSE CAST((cents - prev) * 10000 // prev AS BIGINT)
+           END AS yoy_bp
+    FROM (
+        SELECT mon, cents,
+               LAG(cents, 12) OVER (ORDER BY mon) AS prev
+        FROM monthly
+    ) x
+    """,
+)
+def q_yoy_growth(spark, sf_dir):
+    """Year-over-year growth in integer basis points: calendar-month
+    revenue fold, then LAG 12 over the (calendar-sized) month table.
+    Truncating integer division is identical in both engines for
+    negative growth too (both DIV and // truncate toward zero); the
+    CASE guards missing/zero base months."""
+    orders = t(spark, sf_dir, "orders")
+    monthly = orders.groupBy(
+        F.date_trunc("month", "o_orderdate").cast("date").alias("mon")
+    ).agg(
+        F.sum(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+            .cast("bigint")
+        ).cast("bigint").alias("cents")
+    )
+    w = Window.orderBy("mon")
+    return (
+        monthly.withColumn("prev", F.lag("cents", 12).over(w))
+        .select(
+            "mon", "cents",
+            F.expr(
+                "CASE WHEN prev IS NULL OR prev = 0 THEN NULL "
+                "ELSE CAST((cents - prev) * 10000 DIV prev AS BIGINT) END"
+            ).alias("yoy_bp"),
+        )
+    )
+
+
+# The one date-axis truth both interval-coverage keys are hash-checked
+# against: the salted key's re-shard must be a pure physical rewrite.
+_INTERVAL_COVERAGE_ORACLE = """
+    WITH iv AS (
+      SELECT l_suppkey AS supp, CAST(l_shipdate AS DATE) AS s,
+             CAST(l_shipdate AS DATE)
+               + CAST(1 + CAST(l_quantity AS BIGINT) % 20 AS INTEGER) AS e
+      FROM lineitem
+    ),
+    marked AS (
+      SELECT supp, s, e,
+             MAX(e) OVER (PARTITION BY supp ORDER BY s, e
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS pmax
+      FROM iv
+    ),
+    isl AS (
+      SELECT supp, s, e,
+             CAST(SUM(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
+               OVER (PARTITION BY supp ORDER BY s, e
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS BIGINT) AS island
+      FROM marked
+    ),
+    per_isl AS (
+      SELECT supp, island, date_diff('day', MIN(s), MAX(e)) AS len_days
+      FROM isl GROUP BY supp, island
+    )
+    SELECT supp, CAST(COUNT(*) AS INT) AS n_islands,
+           CAST(SUM(len_days) AS BIGINT) AS covered_days
+    FROM per_isl GROUP BY supp
+    """
+
+
+def _transit_intervals(spark, sf_dir):
+    """Each lineitem's shipping-transit interval per supplier on the
+    date axis: [shipdate, shipdate + 1..20 days], the length derived
+    deterministically from the quantity."""
+    li = t(spark, sf_dir, "lineitem")
+    s = F.to_date("l_shipdate")
+    days = (F.col("l_quantity").cast("bigint") % 20 + 1).cast("int")
+    return li.select(
+        F.col("l_suppkey").alias("supp"),
+        s.alias("s"),
+        F.date_add(s, days).alias("e"),
+    )
+
+
+@query("q_interval_coverage", oracle=_INTERVAL_COVERAGE_ORACLE)
+def q_interval_coverage(spark, sf_dir):
+    """Sweep-line interval UNION per key: each lineitem contributes a
+    shipping-transit interval [shipdate, shipdate + 1..20 days]
+    (length derived deterministically from quantity), and the result
+    is the number of merged busy islands and total covered days per
+    supplier — overlap-aware coverage, NOT gap-sessionization
+    (overlapping intervals from different orders must merge even when
+    their starts are dense). Classic sweep line: running MAX(end)
+    over the start-ordered window marks island breaks, a cumulative
+    sum numbers islands, and coverage is max(end)-min(start) per
+    island. Tie rows (equal start) can never open an island (their
+    predecessor's end >= the shared start), so the (s, e) window
+    order is total for the answer. At 100 TB: one shuffle on the
+    partition key, two window passes over it, then an island-bounded
+    aggregate — no joins, no driver state."""
+    from team_02_spark.operators.analytics import interval_union
+
+    iv = _transit_intervals(spark, sf_dir)
+    return interval_union(iv, "supp", "s", "e").select(
+        "supp", "n_islands", F.col("covered").alias("covered_days")
+    )
+
+
+@query("q_interval_coverage_salted", oracle=_INTERVAL_COVERAGE_ORACLE)
+def q_interval_coverage_salted(spark, sf_dir):
+    """q_interval_coverage's answer through the HOT-KEY-SAFE path:
+    the same shipping-transit intervals, converted to integer day
+    indices, run through `interval_union_salted` (clip at 45-day
+    epoch buckets → per-(supp, bucket) sweep → merge pass) instead of
+    the single-per-key sweep. The oracle is deliberately the UNSALTED
+    date-axis truth, so the driver hash-check pins the operator's
+    core claim — the re-shard is a pure physical rewrite with
+    bit-identical semantics — on real data at both SFs, the same
+    pattern `q_join_salted` uses for the skew join. bucket_width=45
+    ≈ 2× the max interval length (21 days), keeping the clip-explode
+    factor under ~1.5. At 100 TB this is the variant you run when one
+    key's interval history outgrows an executor (SCALING.md saltint
+    probe: 16 M one-key intervals, 26.9 s plain → 4.7 s salted)."""
+    from team_02_spark.operators.analytics import interval_union_salted
+
+    epoch = F.lit("1990-01-01").cast("date")
+    iv = _transit_intervals(spark, sf_dir).select(
+        "supp",
+        F.datediff("s", epoch).alias("s"),
+        F.datediff("e", epoch).alias("e"),
+    )
+    return interval_union_salted(
+        iv, "supp", "s", "e", bucket_width=45
+    ).select("supp", "n_islands", F.col("covered").alias("covered_days"))

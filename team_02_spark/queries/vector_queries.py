@@ -3,7 +3,9 @@ J5, north-star "similarity search").
 
 q_knn_topk is the exact, oracle-checked baseline (5 probe vectors vs
 the whole corpus); q_knn_lsh is the 100 TB path (hyperplane-bucketed,
-multi-probe) — probabilistic recall → rows-only. Cosines are computed
+multi-probe) — probabilistic recall → rows-only. q_crossmodal_knn
+retrieves across modalities through the shared fake-codec feature
+space. Cosines are computed
 in double on both sides (see functions/vectors.dot) and rounded to 6dp
 before ranking so rank order can't flip on last-ulp noise.
 """
@@ -24,7 +26,7 @@ from team_02_spark.util import ensure_parallelism, shared_pass
 # accumulate in double. DuckDB's generate_subscripts/list arithmetic:
 # we use list_transform over an index range — identical sequential
 # double accumulation to Spark's aggregate().
-_COS_SQL = """
+COS_SQL = """
     list_sum(list_transform(range(1, 65),
         i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
     / (SQRT(list_sum(list_transform(range(1, 65),
@@ -40,7 +42,7 @@ _COS_SQL = """
     WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
     scored AS (
         SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-               ROUND({_COS_SQL}, 6) AS score
+               ROUND({COS_SQL}, 6) AS score
         FROM embeddings c, q
         WHERE c.vec_id <> q.vec_id
     )
@@ -99,7 +101,7 @@ def q_knn_lsh(spark, sf_dir):
     c AS (SELECT vec_id, embedding, label FROM embeddings
           WHERE vec_id >= 20),
     scored AS (
-        SELECT q.q_id, c.vec_id AS c_id, ROUND({_COS_SQL}, 6) AS score
+        SELECT q.q_id, c.vec_id AS c_id, ROUND({COS_SQL}, 6) AS score
         FROM c, q
     ),
     top5 AS (
@@ -335,7 +337,7 @@ def q_knn_ivf(spark, sf_dir):
           WHERE vec_id >= 20),
     scored AS (
         SELECT q.q_id, q.label AS q_label, c.vec_id AS c_id,
-               c.label AS c_label, ROUND({_COS_SQL}, 6) AS score
+               c.label AS c_label, ROUND({COS_SQL}, 6) AS score
         FROM c, q
     ),
     ranked AS (
@@ -567,7 +569,7 @@ def _mmr_oracle(k: int = 5, shortlist_n: int = 20) -> str:
     WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
     scored AS (
         SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-               ROUND({_COS_SQL}, 6) AS rel
+               ROUND({COS_SQL}, 6) AS rel
         FROM embeddings c, q
         WHERE c.vec_id <> q.vec_id
     ),
@@ -581,7 +583,7 @@ def _mmr_oracle(k: int = 5, shortlist_n: int = 20) -> str:
     ),
     pairs AS (
         SELECT s1.q_id, s1.c_id AS a, s2.c_id AS b,
-               ROUND({_COS_SQL}, 6) AS sim
+               ROUND({COS_SQL}, 6) AS sim
         FROM short s1
         JOIN short s2 ON s1.q_id = s2.q_id AND s1.c_id <> s2.c_id
         JOIN embeddings q ON q.vec_id = s1.c_id
@@ -1423,3 +1425,101 @@ def q_cluster_profile(spark, sf_dir):
             "first_member",
         )
     )
+
+
+@query(
+    "q_crossmodal_knn",
+    # Full ANSI oracle (r8 verdict #4 — the last exactly-computable
+    # rows-only key): the fake-codec feature is the 8-bin histogram of
+    # the text's UTF-8 bytes (np.histogram over [0,256) => bin =
+    # byte // 32 = first_hex_nibble // 2, so DuckDB recomputes it from
+    # hex(encode(text)) without per-byte blob access), normalized in
+    # double then narrowed to REAL exactly like the Arrow float32
+    # feature column; cosine/round/rank replay the q_knn_topk pattern.
+    # An empty payload decodes as one zero byte (the fake-codec
+    # contract), hence the '00' substitution.
+    oracle="""
+    WITH hx0 AS (
+      SELECT doc_id, hex(encode(COALESCE(text, ''))) AS hx FROM documents
+    ),
+    hx1 AS (
+      SELECT doc_id, CASE WHEN length(hx) = 0 THEN '00' ELSE hx END AS hx
+      FROM hx0
+    ),
+    bins AS (
+      SELECT doc_id,
+             (strpos('0123456789ABCDEF',
+                     substr(hx, CAST(2*u-1 AS BIGINT), 1)) - 1) // 2 AS bin
+      FROM (SELECT doc_id, hx, unnest(range(1, length(hx)//2 + 1)) AS u
+            FROM hx1)
+    ),
+    counts AS (
+      SELECT doc_id, COUNT(*) AS total,
+             [CAST(SUM(CASE WHEN bin=0 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=1 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=2 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=3 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=4 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=5 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=6 THEN 1 ELSE 0 END) AS BIGINT),
+              CAST(SUM(CASE WHEN bin=7 THEN 1 ELSE 0 END) AS BIGINT)] AS h
+      FROM bins GROUP BY doc_id
+    ),
+    feat AS (
+      SELECT doc_id,
+             list_transform(h, c -> CAST(CAST(c AS DOUBLE) / total AS REAL))
+               AS f
+      FROM counts
+    ),
+    scored AS (
+      SELECT q.doc_id AS q_id, c.doc_id AS vec_id,
+             ROUND(
+               list_sum(list_transform(range(1, 9),
+                   i -> CAST(q.f[i] AS DOUBLE) * CAST(c.f[i] AS DOUBLE)))
+               / (SQRT(list_sum(list_transform(range(1, 9),
+                   i -> CAST(q.f[i] AS DOUBLE) * CAST(q.f[i] AS DOUBLE))))
+                * SQRT(list_sum(list_transform(range(1, 9),
+                   i -> CAST(c.f[i] AS DOUBLE) * CAST(c.f[i] AS DOUBLE)))))
+             , 6) AS score
+      FROM feat c, (SELECT * FROM feat WHERE doc_id % 499 = 0) q
+    )
+    SELECT q_id, vec_id, score, rnk AS "rank" FROM (
+      SELECT q_id, vec_id, score,
+             CAST(ROW_NUMBER() OVER (PARTITION BY q_id
+                                     ORDER BY score DESC, vec_id) AS INT)
+               AS rnk
+      FROM scored
+    ) r WHERE rnk <= 3
+    """,
+)
+def q_crossmodal_knn(spark, sf_dir):
+    """Cross-modal retrieval: text queries against a media corpus
+    through the SHARED deterministic feature space (the fake-codec
+    byte-histogram embedder on both sides — the seam where a real
+    CLIP-style dual encoder plugs in). Every ~500th document is a
+    text-side query; the full corpus is the media side; exact cosine
+    top-3 via the broadcast brute-force kernel (recall oracle for the
+    IVF path at scale). Self-retrieval property pinned by test: a
+    query's own media item scores exactly 1.0 (the coarse fake-codec
+    histograms collide across duplicate-shaped texts, so same-score
+    ties with lower ids may crowd it out of the top-k — rank-1 is
+    still always a 1.0 hit). Since r9 the whole lane is pinned by a
+    full DuckDB oracle (decorator above) — the fake-codec features
+    and the cosine top-3 are deterministic arithmetic, so even this
+    mapInPandas lane is hash-checked, not rows-only."""
+    from team_02_spark.operators.multimodal import (
+        extract_features, synthesize_media,
+    )
+
+    docs = t(spark, sf_dir, "documents")
+    media = extract_features(
+        synthesize_media(docs, kind="image"), decode_stub="fake"
+    ).select(F.col("doc_id").alias("vec_id"),
+             F.col("feature").alias("embedding"))
+    qdocs = docs.filter(F.col("doc_id") % 499 == 0)
+    queries = extract_features(
+        synthesize_media(qdocs, kind="text"), decode_stub="fake"
+    ).select(F.col("doc_id").alias("q_id"), F.col("feature").alias("q_vec"))
+    from team_02_spark.operators.similarity import knn_bruteforce
+
+    return knn_bruteforce(queries, media, k=3, round_decimals=6)

@@ -10,6 +10,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from team_02_spark.util import hadoop_fs
+
 
 def write_csv(df: DataFrame, path: str, *, header: bool = True,
               mode: str = "overwrite") -> None:
@@ -42,11 +44,15 @@ def write_csv_content_addressed(df: DataFrame, out_dir: str, *,
                                 skip_if_exists: bool = True) -> str:
     """S3+S4: write to ``<out_dir>/<fingerprint>.csv`` — the
     reference's content-addressed cache write (src/main.py:71-73),
-    idempotent: an existing fingerprint directory is the cache hit."""
+    idempotent: an existing fingerprint directory is the cache hit.
+    The hit is checked through the Hadoop FileSystem client, so it
+    holds for hdfs://, s3a:// and file:// out_dirs too."""
     fp = dataset_fingerprint(df)
     path = os.path.join(out_dir, f"{fp}.csv")
-    if skip_if_exists and os.path.exists(path):
-        return path
+    if skip_if_exists:
+        fs, jpath, _ = hadoop_fs(df.sparkSession, path)
+        if fs.exists(jpath):
+            return path
     write_csv(df, path)
     return path
 
@@ -117,10 +123,7 @@ def compact_parquet(spark, path: str, *, target_file_bytes: int = 128 * 1024 * 1
     """
     import math
 
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
+    fs, jpath, _ = hadoop_fs(spark, path)
     if not fs.exists(jpath):
         raise FileNotFoundError(f"compact_parquet: no such dir {path!r}")
     total = fs.getContentSummary(jpath).getLength()

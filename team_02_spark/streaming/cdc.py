@@ -1,7 +1,7 @@
 """Streaming CDC apply — a Debezium-style change feed folded into a
 parquet snapshot through ``foreachBatch`` idempotent upserts (the
 exactly-once sink pattern the engine demonstrates here; r7 verdict
-#5). The batch twin is `q_cdc_apply` (queries/r7c_queries.py) /
+#5). The batch twin is `q_cdc_apply` (queries/streaming_queries.py) /
 `operators.upsert.upsert`; this module drives the SAME merge from a
 `readStream`, so CDC runs in both modes like every other curation
 stage.
@@ -36,27 +36,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from team_02_spark.operators.upsert import upsert
+from team_02_spark.util import hadoop_fs
 
 _POINTER = "_LATEST"
 
-# Pointer I/O goes through the Hadoop FileSystem client, NOT os.path:
-# on a real cluster state_dir is hdfs:///s3a:// and a driver-local
-# os.path.exists would silently return False -> latest_state None ->
-# the merge folds into an EMPTY base, quietly dropping the snapshot —
-# the same non-local-scheme bug class the r7 advisor caught in
-# compact_parquet's os.walk census.
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    ), jpath, jvm
+# Pointer I/O goes through the Hadoop FileSystem client (hadoop_fs),
+# NOT os.path: on a real cluster state_dir is hdfs:///s3a:// and a
+# driver-local os.path.exists would silently return False ->
+# latest_state None -> the merge folds into an EMPTY base, quietly
+# dropping the snapshot.
 
 
 def _read_pointer(spark, state_dir: str) -> str | None:
-    fs, ptr, _ = _fs(spark, state_dir.rstrip("/") + "/" + _POINTER)
+    fs, ptr, _ = hadoop_fs(spark, state_dir.rstrip("/") + "/" + _POINTER)
     if not fs.exists(ptr):
         return None
     stream = fs.open(ptr)
@@ -85,7 +77,7 @@ def _recover_version(spark, state_dir: str) -> str | None:
     in-flight batch and replacement-semantics upserts are idempotent.
     Returns None only when the state_dir holds no versions at all —
     the single case where an empty base is legitimate."""
-    fs, root, _ = _fs(spark, state_dir.rstrip("/"))
+    fs, root, _ = hadoop_fs(spark, state_dir.rstrip("/"))
     if not fs.exists(root):
         return None
     numbered, seed = [], False
@@ -174,7 +166,7 @@ def _advance_pointer(spark, state_dir: str, version: str, *,
     concurrent heal landed the same version — a heal can never exceed
     the single writer, so '>' means a second writer, still forward)."""
     base = state_dir.rstrip("/")
-    fs, ptr, jvm = _fs(spark, base + "/" + _POINTER)
+    fs, ptr, jvm = hadoop_fs(spark, base + "/" + _POINTER)
     tmp = jvm.org.apache.hadoop.fs.Path(
         base + "/" + _POINTER + ".tmp." + version)
     stream = fs.create(tmp, True)

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from team_02_spark.util import hadoop_fs
+
 
 def stream_to_parquet(df: DataFrame, path: str, checkpoint: str, *,
                       trigger_available_now: bool = True) -> StreamingQuery:
@@ -93,17 +95,18 @@ def idempotent_foreach_batch(batch_fn, commit_dir: str):
     redoes the work (sink must tolerate its own partial output, e.g.
     overwrite-by-batch-path); crash after → replay skips. On a real
     cluster the commit dir lives on the object store next to the
-    checkpoint.
+    checkpoint, so markers are checked and written through the Hadoop
+    FileSystem client: a restarted driver sees them under any scheme.
     """
-    import os
 
     def fn(batch_df, batch_id):
-        marker = os.path.join(commit_dir, f"{batch_id}.committed")
-        if os.path.exists(marker):
+        fs, marker, _ = hadoop_fs(
+            batch_df.sparkSession,
+            commit_dir.rstrip("/") + f"/{batch_id}.committed",
+        )
+        if fs.exists(marker):
             return
         batch_fn(batch_df, batch_id)
-        os.makedirs(commit_dir, exist_ok=True)
-        with open(marker, "w"):
-            pass
+        fs.create(marker, True).close()  # creates missing parent dirs
 
     return fn

@@ -204,6 +204,20 @@ def release_shared(df: DataFrame) -> None:
         pass
 
 
+def hadoop_fs(spark, path: str):
+    """``(FileSystem, Path, jvm)`` for ``path`` through the Hadoop
+    FileSystem client — the one filesystem probe that means the same
+    thing on hdfs://, s3a://, file:// and plain local paths. A driver-
+    local ``os.path`` check returns False for every URI, so a cache
+    never hits, a commit marker is never seen, and a pointer reads as
+    absent on a cluster."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    ), jpath, jvm
+
+
 def knuth_uniform(key):
     """Deterministic uniform draw in (0,1) from an integer id column —
     the Knuth multiplicative hash in exact decimal arithmetic

@@ -1,12 +1,14 @@
-"""One implementation per operator: no top-level function name is
-defined in two modules of the engine package. Two copies of one
-operator drift apart (different parameters, different semantics) and
-callers silently pick whichever they happen to import. Pure ``ast``
-scan — no Spark session."""
+"""One definition per thing: no top-level function name is defined in
+two modules of the engine package, no query module is named by the
+round that added it, and no oracle text is spelled out twice. Two
+copies of one operator or oracle drift apart (different parameters,
+different semantics) and callers silently pick whichever they happen
+to import. No Spark session: ``ast`` scans plus the registry dict."""
 
 from __future__ import annotations
 
 import ast
+import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -21,3 +23,42 @@ def test_no_top_level_function_defined_twice():
                 where[node.name].append(str(path.relative_to(PKG)))
     dupes = {name: mods for name, mods in where.items() if len(mods) > 1}
     assert not dupes, f"defined in more than one module: {dupes}"
+
+
+def test_no_query_module_named_by_round():
+    round_named = sorted(
+        p.name for p in (PKG / "queries").glob("*.py")
+        if re.match(r"r\d+[a-z]?_", p.name)
+    )
+    assert not round_named, f"query modules named by round, not topic: {round_named}"
+
+
+def test_shared_oracle_text_is_one_constant():
+    """Keys that share an oracle must share one constant. Equal text
+    in two objects means the SQL was written out twice. Two equal plain
+    literals in one module compile to one object, so the decorator
+    literals are compared in the source as well."""
+    from team_02_spark.queries import QUERIES
+
+    first: dict[str, str] = {}
+    copies = []
+    for name, spec in QUERIES.items():
+        if spec.oracle is None:
+            continue
+        other = first.setdefault(spec.oracle, name)
+        if QUERIES[other].oracle is not spec.oracle:
+            copies.append((other, name))
+
+    literal_at: dict[str, str] = {}
+    for path in sorted((PKG / "queries").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not (isinstance(node, ast.Call) and getattr(node.func, "id", None) == "query"):
+                continue
+            for kw in node.keywords:
+                if kw.arg == "oracle" and isinstance(kw.value, ast.Constant) \
+                        and isinstance(kw.value.value, str):
+                    key = ast.unparse(node.args[0]).strip("'\"")
+                    other = literal_at.setdefault(kw.value.value, key)
+                    if other != key:
+                        copies.append((other, key))
+    assert not copies, f"equal oracle text written out more than once: {copies}"

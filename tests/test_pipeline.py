@@ -180,6 +180,24 @@ def test_orc_roundtrip_preserves_content(spark, tmp_path):
         dataset_fingerprint(docs, "doc_id", "text", "lang")
 
 
+def test_content_addressed_csv_hits_cache_for_uri_out_dir(spark, tmp_path):
+    """A ``file://`` out_dir is a cache hit on the second call: the
+    snapshot is not rewritten (part files keep their mtimes), and it
+    lives under out_dir, not in a cwd-relative copy of the URI."""
+    import glob
+
+    from team_02_spark.sinks.writers import write_csv_content_addressed
+
+    df = spark.range(20).withColumnRenamed("id", "k")
+    first = write_csv_content_addressed(df, tmp_path.as_uri())
+    parts = glob.glob(str(tmp_path / "*.csv" / "part-*"))
+    assert parts
+    mtimes = {f: os.stat(f).st_mtime_ns for f in parts}
+    assert write_csv_content_addressed(df, tmp_path.as_uri()) == first
+    assert {f: os.stat(f).st_mtime_ns for f in glob.glob(
+        str(tmp_path / "*.csv" / "part-*"))} == mtimes
+
+
 def test_write_training_shards_layout(spark, tmp_path):
     """Shard export: every doc lands in exactly one shard, shard
     assignment matches q_shard_plan's manifest, and the in-shard

@@ -249,28 +249,39 @@ def test_watermark_late_data_determinism(spark, tmp_path):
     assert str(rows[1]["window_start"]).startswith("2026-01-01 12:00")
 
 
-def test_idempotent_foreach_batch_survives_replay(spark, tmp_path):
+def _replay_batches(spark, tmp_path, commit_root: str) -> None:
     """Simulate Structured Streaming's at-least-once foreachBatch
     replay: deliver the same micro-batch twice (same batch_id). The
-    commit-log wrapper must apply the side effect exactly once; a new
-    batch_id must still apply."""
+    commit-log wrapper must apply the side effect exactly once, a new
+    batch_id must still apply, and the marker must land in the commit
+    dir itself (not in a cwd-relative copy of its URI)."""
     from team_02_spark.streaming.sinks import idempotent_foreach_batch
 
     out = str(tmp_path / "applied")
-    commit = str(tmp_path / "commits")
 
     def append_batch(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out)
 
-    fn = idempotent_foreach_batch(append_batch, commit)
+    fn = idempotent_foreach_batch(append_batch, f"{commit_root}/commits")
     batch = spark.range(10).withColumnRenamed("id", "k")
 
     fn(batch, 0)
     fn(batch, 0)  # replay of an already-committed batch → no-op
     assert spark.read.parquet(out).count() == 10
+    assert (tmp_path / "commits" / "0.committed").exists()
 
     fn(batch, 1)  # genuinely new batch still lands
     assert spark.read.parquet(out).count() == 20
+
+
+def test_idempotent_foreach_batch_survives_replay(spark, tmp_path):
+    _replay_batches(spark, tmp_path, str(tmp_path))
+
+
+def test_idempotent_foreach_batch_survives_replay_uri_commit_dir(spark, tmp_path):
+    """Same replay with a ``file://`` commit dir — the form a commit
+    dir takes next to a cluster checkpoint."""
+    _replay_batches(spark, tmp_path, tmp_path.as_uri())
 
 
 def test_idempotent_sink_end_to_end_stream(spark, tmp_path):
