@@ -770,8 +770,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # re-evaluate the whole pair-generation subtree per consumer —
         # the r4 plan audit caught exactly that (15→31 shuffles).
         # The PREVIOUS round's frame is dead once the new one is
-        # materialized (r7 advisor: blocks otherwise accumulate across
-        # up to 20 rounds, 2×-replicated in the reliable strategy).
+        # materialized: release_shared frees its checkpoint blocks,
+        # which otherwise stay registered across up to 20 rounds.
         prev = labels
         labels = new_labels.transform(shared_pass, eager=True)
         release_shared(prev)

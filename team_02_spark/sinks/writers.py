@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from team_02_spark.util import hadoop_fs
+from team_02_spark.util import hadoop_fs, read_text, write_text
 
 
 def write_csv(df: DataFrame, path: str, *, header: bool = True,
@@ -206,7 +206,10 @@ def publish_audited(df: DataFrame, out_dir: str, *,
     3. PUBLISH: one atomic rename to ``{out_dir}/snapshot-<uuid>``
        plus a ``_CURRENT`` pointer file written via tmp+rename, so a
        reader either sees the previous snapshot or the new one,
-       never a half-written mix.
+       never a half-written mix. All of it goes through the Hadoop
+       FileSystem client (hdfs://, s3a://, file:// and plain paths
+       alike). The old pointer is deleted just before the rename, so
+       a reader in that gap gets FileNotFoundError, not partial data.
 
     A failed audit raises and LEAVES the staging dir for post-mortem;
     the published history is append-only (old snapshots remain until
@@ -216,13 +219,14 @@ def publish_audited(df: DataFrame, out_dir: str, *,
     directory rename."""
     import uuid as _uuid
 
+    spark = df.sparkSession
+    base = out_dir.rstrip("/")
     token = _uuid.uuid4().hex
-    staging = os.path.join(out_dir, f".staging-{token}")
-    final = os.path.join(out_dir, f"snapshot-{token}")
-    os.makedirs(out_dir, exist_ok=True)
+    staging = f"{base}/.staging-{token}"
+    final = f"{base}/snapshot-{token}"
     df.write.mode("errorifexists").parquet(staging)
 
-    staged = df.sparkSession.read.parquet(staging)
+    staged = spark.read.parquet(staging)
     for check in checks or []:
         problem = check(staged)
         if problem:
@@ -231,18 +235,25 @@ def publish_audited(df: DataFrame, out_dir: str, *,
                 f"snapshot kept at {staging} for inspection"
             )
 
-    os.replace(staging, final)
-    tmp_ptr = os.path.join(out_dir, f"._CURRENT.{token}.tmp")
-    with open(tmp_ptr, "w", encoding="utf-8") as fh:
-        fh.write(f"snapshot-{token}\n")
-    os.replace(tmp_ptr, os.path.join(out_dir, "_CURRENT"))
+    fs, jstaging, jvm = hadoop_fs(spark, staging)
+    path = jvm.org.apache.hadoop.fs.Path
+    if not fs.rename(jstaging, path(final)):
+        raise OSError(f"publish_audited: could not rename {staging} to {final}")
+    tmp_ptr = f"{base}/._CURRENT.{token}.tmp"
+    write_text(spark, tmp_ptr, f"snapshot-{token}\n")
+    ptr = path(f"{base}/_CURRENT")
+    fs.delete(ptr, False)  # HDFS will not rename onto an existing file
+    if not fs.rename(path(tmp_ptr), ptr):
+        raise OSError(f"publish_audited: could not point _CURRENT at {final}")
     return final
 
 
 def read_published(spark, out_dir: str) -> DataFrame:
     """Read whatever snapshot ``_CURRENT`` points at — the reader half
-    of the WAP contract (a concurrent publish flips the pointer
-    atomically; this reader never sees partial data)."""
-    with open(os.path.join(out_dir, "_CURRENT"), encoding="utf-8") as fh:
-        snap = fh.read().strip()
-    return spark.read.parquet(os.path.join(out_dir, snap))
+    of the WAP contract (a concurrent publish renames a complete
+    pointer into place; this reader never sees partial data)."""
+    base = out_dir.rstrip("/")
+    snap = read_text(spark, f"{base}/_CURRENT")
+    if snap is None:
+        raise FileNotFoundError(f"no published snapshot under {out_dir}")
+    return spark.read.parquet(f"{base}/{snap}")

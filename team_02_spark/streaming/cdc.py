@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from team_02_spark.operators.upsert import upsert
-from team_02_spark.util import hadoop_fs
+from team_02_spark.util import hadoop_fs, read_text, write_text
 
 _POINTER = "_LATEST"
 
@@ -48,19 +48,7 @@ _POINTER = "_LATEST"
 
 
 def _read_pointer(spark, state_dir: str) -> str | None:
-    fs, ptr, _ = hadoop_fs(spark, state_dir.rstrip("/") + "/" + _POINTER)
-    if not fs.exists(ptr):
-        return None
-    stream = fs.open(ptr)
-    try:
-        out = bytearray()
-        b = stream.read()
-        while b != -1 and len(out) < 4096:
-            out.append(b)
-            b = stream.read()
-        return bytes(out).decode("utf-8").strip()
-    finally:
-        stream.close()
+    return read_text(spark, state_dir.rstrip("/") + "/" + _POINTER)
 
 
 def _recover_version(spark, state_dir: str) -> str | None:
@@ -167,13 +155,9 @@ def _advance_pointer(spark, state_dir: str, version: str, *,
     the single writer, so '>' means a second writer, still forward)."""
     base = state_dir.rstrip("/")
     fs, ptr, jvm = hadoop_fs(spark, base + "/" + _POINTER)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        base + "/" + _POINTER + ".tmp." + version)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(version.encode("utf-8")))
-    finally:
-        stream.close()
+    tmp_path = base + "/" + _POINTER + ".tmp." + version
+    write_text(spark, tmp_path, version)
+    tmp = jvm.org.apache.hadoop.fs.Path(tmp_path)
     if monotone:
         for _ in range(3):
             current = _read_pointer(spark, state_dir)

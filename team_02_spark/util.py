@@ -2,13 +2,8 @@
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
-
-# Session conf gating the small-input repartition probe. On a real
-# cluster reading well-partitioned tables the probe is pure overhead
-# (a plan→RDD conversion per wrapped query) — set "false" there; the
-# default "true" is right for local runs over tiny fixture files.
-ENSURE_PARALLELISM_CONF = "spark.team02.ensureParallelism"
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -24,25 +19,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     plain column-op or explode-then-aggregate lane. SCALING.md
     "ensure_parallelism call sites" has the per-site measurements
     behind each kept call."""
-    spark = df.sparkSession
-    if str(spark.conf.get(ENSURE_PARALLELISM_CONF, "true")).lower() == "false":
-        return df
-    target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 
-
-# Session conf gating the shared-pass materialization strategy:
-# "auto" (default) picks by master, "true"/"false" force the
-# reliable / local strategy regardless of master.
-SHARED_PASS_RELIABLE_CONF = "spark.team02.reliableSharedPass"
-
-# Explicit checkpoint-dir override for the reliable strategy. When
-# unset, the dir is auto-provisioned on the Hadoop DEFAULT filesystem
-# (HDFS/S3 on a real cluster — replicated, hence reliable) under
-# /tmp/team02_ckpt/<applicationId>.
-SHARED_PASS_CKPT_CONF = "spark.team02.checkpointDir"
 
 # Explain-dump aid (r15 verdict #8): a lazily localCheckpointed frame
 # truncates explain() at `Scan ExistingRDD`, hiding the sub-plan the
@@ -55,153 +36,49 @@ SHARED_PASS_CKPT_CONF = "spark.team02.checkpointDir"
 SHARED_PASS_INLINE_CONF = "spark.team02.sharedPassInlineExplain"
 
 
-def _shared_scheme(path: str | None) -> bool:
-    """True when every executor can read blocks another executor
-    wrote through this path: any explicit non-file scheme (hdfs://,
-    s3a://, ...). A file:// or scheme-less path is executor-LOCAL on
-    a multi-node cluster — setCheckpointDir accepts it with only a
-    warning, each executor then checkpoints to its own disk, and
-    later cross-executor reads fail (r8 advisor)."""
-    if not path:
-        return False
-    scheme = path.split("://", 1)[0] if "://" in path else ""
-    return scheme not in ("", "file")
-
-
-def _ensure_checkpoint_dir(spark, *, require_shared: bool = False) -> bool:
-    """Make sure the SparkContext has a checkpoint dir for the
-    reliable shared-pass strategy. Resolution order: explicit
-    ``spark.team02.checkpointDir`` conf (per-app subdir appended so
-    concurrent apps never share), else an already-configured
-    ``sc.setCheckpointDir``, else auto-provision
-    ``<fs.defaultFS>/tmp/team02_ckpt/<applicationId>`` — on a real
-    cluster fs.defaultFS is the replicated store (HDFS/S3), which is
-    exactly the durability the strategy wants. Returns False (never
-    raises) when the dir can't be created, so the caller can degrade
-    to the persist fallback instead of failing the query.
-
-    ``require_shared`` (set by the auto strategy on non-local
-    masters): a resolved dir whose scheme is file:// or empty is
-    REJECTED — on a standalone/k8s cluster without HDFS, fs.defaultFS
-    is file:/// and a "checkpoint" there scatters blocks across
-    executor-local disks, which is strictly worse than the
-    replicated-persist fallback (r8 advisor medium). Forcing
-    ``spark.team02.reliableSharedPass=true`` skips the guard — the
-    explicit opt-in for clusters whose local-scheme path is actually
-    a shared mount (NFS)."""
-    sc = spark.sparkContext
-    want = spark.conf.get(SHARED_PASS_CKPT_CONF, None)
-    current = sc.getCheckpointDir()
-    try:
-        if want:
-            if require_shared and not _shared_scheme(want):
-                return False
-            target = want.rstrip("/") + "/" + sc.applicationId
-            if not current or not current.startswith(want.rstrip("/")):
-                sc.setCheckpointDir(target)
-            return True
-        if current:
-            return not require_shared or _shared_scheme(current)
-        fs_default = sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-        if require_shared and not _shared_scheme(fs_default):
-            return False
-        sc.setCheckpointDir(
-            fs_default.rstrip("/") + "/tmp/team02_ckpt/" + sc.applicationId
-        )
-        return True
-    except Exception:  # unwritable FS / bad conf: degrade, don't fail
-        return False
-
-
 def shared_pass(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """Materialize-once seam for frames with many downstream consumers
-    (use via ``frame.transform(shared_pass)``).
+    (use via ``frame.transform(shared_pass)``): the frame derives once
+    and its lineage is cut, so N consumers read it instead of
+    re-deriving it N times and iterative callers (connected
+    components) cannot nest the prior plan every round.
 
-    Local mode: ``localCheckpoint`` — truncates lineage so the
-    N-consumer plan derives the frame once instead of N times. That is
-    the right call on one JVM, but localCheckpoint stores blocks
-    UNREPLICATED on executors with the lineage gone, so on a real
-    cluster an executor loss (or dynamic-allocation decommission)
-    fails the job unrecoverably. So in cluster mode (master not
-    local*, or ``spark.team02.reliableSharedPass=true``) this uses a
-    reliable strategy instead: ``checkpoint()`` to a replicated
-    checkpoint FS — the dir is taken from ``spark.team02.checkpointDir``
-    / an existing ``sc.setCheckpointDir``, else auto-provisioned on
-    fs.defaultFS (see :func:`_ensure_checkpoint_dir`). Checkpointing
-    both replicates the blocks AND truncates lineage, which iterative
-    callers (connected components, BFS) require: a lineage-preserving
-    cache would nest the full prior plan every round — the exact
-    analysis-time blowup the r7 advisor flagged.
+    One rule, on Spark's own checkpoints:
 
-    Last resort (checkpoint dir cannot be provisioned):
-    ``persist(MEMORY_AND_DISK_2)`` — 2× replicated blocks so a lost
-    block recomputes instead of failing the job. Lineage stays intact
-    in that path, so for ``eager`` (iterative) callers the frame is
-    additionally rebuilt from its materialized RDD
-    (``createDataFrame(rdd, schema)``), which truncates the logical
-    plan at the cost of a Python ser/de boundary — acceptable only as
-    the documented degraded path; configure a checkpoint dir on real
-    clusters.
+    - local master: ``localCheckpoint`` (one block manager, so a
+      second replica would have no peer to go to);
+    - other masters with a checkpoint dir (``spark.checkpoint.dir`` or
+      ``sc.setCheckpointDir``): reliable ``checkpoint`` to that dir;
+    - other masters without one: ``localCheckpoint`` at
+      ``MEMORY_AND_DISK_2``, which survives one executor loss.
 
-    ``eager`` forces materialization now — iterative callers
-    (connected components) need it to cap plan growth per round.
-
-    A streaming frame passes through unchanged: its sink executes it
-    once per micro-batch, so there is no lineage to truncate (and a
-    streaming frame cannot be checkpointed).
+    ``eager`` materializes now. A streaming frame passes through: its
+    sink runs it once per micro-batch and it cannot be checkpointed.
     """
     spark = df.sparkSession
-    sc = spark.sparkContext
     if str(spark.conf.get(SHARED_PASS_INLINE_CONF, "false")).lower() == "true":
         return df  # explain-dump passthrough — see SHARED_PASS_INLINE_CONF
     if df.isStreaming:
         return df
-    mode = str(spark.conf.get(SHARED_PASS_RELIABLE_CONF, "auto")).lower()
-    local = sc.master.startswith("local")
-    if mode == "true" or (mode == "auto" and not local):
-        # In auto mode on a cluster, only a genuinely shared FS
-        # qualifies as "reliable" (require_shared); the forced mode is
-        # the user's explicit opt-in and trusts their dir as-is.
-        if _ensure_checkpoint_dir(
-            spark, require_shared=(mode != "true" and not local)
-        ):
-            return df.checkpoint(eager=eager)
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        if eager:
-            out.count()
-            # Truncate lineage for iterative callers: downstream plans
-            # read the materialized RDD, not the nested prior plan.
-            # The rebuilt frame gets ITS OWN replicated persist (and an
-            # eager count) so downstream reads hit cached blocks, then
-            # the source blocks are released — without this the source
-            # persist leaked for the life of the app because
-            # release_shared on the (unpersisted) rebuilt frame was a
-            # no-op (r8 advisor). Block loss on the rebuilt frame
-            # recomputes through the full lineage — acceptable only in
-            # this documented degraded path.
-            rebuilt = spark.createDataFrame(out.rdd, out.schema).persist(
-                StorageLevel.MEMORY_AND_DISK_2
-            )
-            rebuilt.count()
-            out.unpersist()
-            return rebuilt
-        return out
-    return df.localCheckpoint(eager=eager)
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        return df.localCheckpoint(eager=eager)
+    if sc.getCheckpointDir():
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK_2)
 
 
 def release_shared(df: DataFrame) -> None:
-    """Free a shared-pass frame a caller no longer needs (iterative
-    loops: the previous round's labels/frontier). ``unpersist`` drops
-    localCheckpoint / persist blocks; reliable ``checkpoint()`` files
-    are left for the context's own cleanup (they are bounded per app
-    and live under /tmp/team02_ckpt/<appId>). No-op on errors — this
-    is an optimization, never a correctness gate."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+    """Free the blocks of a shared-pass frame a caller no longer needs
+    (iterative loops: the previous round's labels). ``unpersist`` only
+    drops cache-manager entries, so this unpersists the checkpointed
+    RDD behind the frame's ``LogicalRDD``; any other frame is left
+    alone. Reliable ``checkpoint`` files stay in the checkpoint dir:
+    Spark deletes them only under
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def hadoop_fs(spark, path: str):
@@ -217,6 +94,36 @@ def hadoop_fs(spark, path: str):
         spark.sparkContext._jsc.hadoopConfiguration()
     ), jpath, jvm
 
+
+
+def read_text(spark, path: str) -> str | None:
+    """The stripped text of a small file (a snapshot pointer) read
+    through :func:`hadoop_fs`, or None when it does not exist."""
+    fs, jpath, _ = hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    stream = fs.open(jpath)
+    try:
+        out = bytearray()
+        b = stream.read()
+        while b != -1 and len(out) < 4096:
+            out.append(b)
+            b = stream.read()
+        return bytes(out).decode("utf-8").strip()
+    finally:
+        stream.close()
+
+
+def write_text(spark, path: str, text: str) -> None:
+    """Create (or overwrite) ``path`` holding ``text`` through
+    :func:`hadoop_fs`. Not atomic: pointer writers write a temp file
+    with this and rename it into place."""
+    fs, jpath, _ = hadoop_fs(spark, path)
+    stream = fs.create(jpath, True)
+    try:
+        stream.write(bytearray(text.encode("utf-8")))
+    finally:
+        stream.close()
 
 def knuth_uniform(key):
     """Deterministic uniform draw in (0,1) from an integer id column —

@@ -3,7 +3,9 @@ two modules of the engine package, no query module is named by the
 round that added it, and no oracle text is spelled out twice. Two
 copies of one operator or oracle drift apart (different parameters,
 different semantics) and callers silently pick whichever they happen
-to import. No Spark session: ``ast`` scans plus the registry dict."""
+to import. The same holds for settings: the engine reads one custom
+conf, and only ``util.shared_pass`` checkpoints. No Spark session:
+``ast`` scans plus the registry dict."""
 
 from __future__ import annotations
 
@@ -62,3 +64,20 @@ def test_shared_oracle_text_is_one_constant():
                     if other != key:
                         copies.append((other, key))
     assert not copies, f"equal oracle text written out more than once: {copies}"
+
+
+def test_one_custom_conf_and_one_checkpoint_site():
+    """Every ``spark.team02.*`` conf is a knob a deployment must know
+    about; the materialize-once rule lives in ``util.shared_pass``
+    alone, so no other module calls Spark's checkpoints directly."""
+    confs, callers = set(), set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                confs.update(re.findall(r"spark\.team02\.[A-Za-z0-9_.]*[A-Za-z0-9_]", node.value))
+            elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                    and node.func.attr in ("localCheckpoint", "checkpoint") and rel != "util.py":
+                callers.add(f"{rel}:{node.lineno}")
+    assert confs == {"spark.team02.sharedPassInlineExplain"}, sorted(confs)
+    assert not callers, f"checkpoint calls outside util.shared_pass: {sorted(callers)}"

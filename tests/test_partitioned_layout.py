@@ -121,16 +121,13 @@ def test_bucketed_join_avoids_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS t_bkt_r")
 
 
-def test_publish_audited_wap_protocol(spark, tmp_path):
-    """Write-Audit-Publish: a passing audit publishes atomically and
-    flips _CURRENT; a FAILING audit raises, keeps the staging dir for
-    post-mortem, and leaves the previously-published snapshot as what
-    readers see — no partial state ever visible."""
+def _check_wap_protocol(spark, out: str, local_dir) -> None:
+    import os
+
     import pytest
 
     from team_02_spark.sinks.writers import publish_audited, read_published
 
-    out = str(tmp_path / "table")
     good = spark.range(10).withColumnRenamed("id", "k")
     snap1 = publish_audited(
         good, out,
@@ -147,14 +144,32 @@ def test_publish_audited_wap_protocol(spark, tmp_path):
         )
     # reader still sees the GOOD snapshot; the failed staging survives
     assert read_published(spark, out).count() == 10
-    import os as _os
-
-    entries = _os.listdir(out)
+    entries = os.listdir(local_dir)
     assert any(e.startswith(".staging-") for e in entries)
     # a second good publish supersedes the first (append-only history)
     publish_audited(good.limit(7), out, checks=[])
     assert read_published(spark, out).count() == 7
     assert sum(1 for e in entries if e.startswith("snapshot-")) == 1
+    assert sum(1 for e in os.listdir(local_dir) if e.startswith("snapshot-")) == 2
+
+
+def test_publish_audited_wap_protocol(spark, tmp_path):
+    """Write-Audit-Publish: a passing audit publishes atomically and
+    flips _CURRENT; a FAILING audit raises, keeps the staging dir for
+    post-mortem, and leaves the previously-published snapshot as what
+    readers see — no partial state ever visible."""
+    _check_wap_protocol(spark, str(tmp_path / "table"), tmp_path / "table")
+
+
+def test_publish_audited_wap_protocol_uri_out_dir(spark, tmp_path, monkeypatch):
+    """The same protocol on a ``file://`` out_dir: staging, rename and
+    pointer go through the Hadoop FileSystem client, so nothing lands
+    in a cwd-relative ``./file:`` directory."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    _check_wap_protocol(spark, (tmp_path / "table").as_uri(), tmp_path / "table")
+    assert not os.path.exists(tmp_path / "file:")
 
 
 def test_file_provenance_multi_file_layout(spark, tmp_path):

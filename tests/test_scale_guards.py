@@ -390,17 +390,15 @@ def test_knn_lsh_empty_corpus(spark):
 # ------------------------------------------ lazy-composition gates (r1 #8)
 
 def test_ensure_parallelism_conf_gate(spark):
-    from team_02_spark.util import ENSURE_PARALLELISM_CONF, ensure_parallelism
+    """The partition count is the only gate: a one-partition frame is
+    repartitioned, a frame already at defaultParallelism passes
+    through as the same object."""
+    from team_02_spark.util import ensure_parallelism
 
     one_part = spark.range(10).coalesce(1)
-    # default: small input is repartitioned up to defaultParallelism
     assert "Repartition" in ensure_parallelism(one_part)._jdf.queryExecution().logical().toString()
-    try:
-        spark.conf.set(ENSURE_PARALLELISM_CONF, "false")
-        gated = ensure_parallelism(one_part)
-        assert gated is one_part  # pure pass-through: no probe, no shuffle
-    finally:
-        spark.conf.unset(ENSURE_PARALLELISM_CONF)
+    wide = spark.range(10).repartition(spark.sparkContext.defaultParallelism)
+    assert ensure_parallelism(wide) is wide
 
 
 def test_ensure_parallelism_widens_small_parquet(spark, tmp_path):
@@ -508,208 +506,148 @@ def test_salted_join_rejects_dim_preserving_how(spark):
         salted_join(df, df, "k", how="right")
 
 
-# ------------------------------- shared_pass cluster-mode branch (r8)
-# The reliable strategy (cluster masters, or forced via
-# spark.team02.reliableSharedPass=true) was the one 100 TB-posture
-# code path with zero test coverage (r7 verdict #3 / next-round #2).
-# These pin: checkpoint-dir auto-provisioning, lineage truncation,
-# the persist(MEMORY_AND_DISK_2) last-resort fallback with its eager
-# RDD rebuild, hash-identity of a shared-pass lane under the reliable
-# strategy, and the iterative caller (connected components) end to
-# end.
-
-import contextlib
+# ------------------------------ shared_pass: one rule on Spark's checkpoints
+# local master -> localCheckpoint; any other master -> checkpoint() when
+# the context has a checkpoint dir, else localCheckpoint replicated 2x.
+# The non-local branches are driven by patching sc.master (and, for the
+# no-dir branch, sc.getCheckpointDir), so no test depends on whether an
+# earlier test left a checkpoint dir on the context.
 
 from tests.conftest import SF_SMOKE
 
+BRANCHES = ("local", "checkpoint", "replicated")
 
-@contextlib.contextmanager
-def _conf(spark, **kv):
-    """Temporarily set session confs (dots encoded as __ in kwargs)."""
-    keys = {k.replace("__", "."): v for k, v in kv.items()}
-    old = {k: spark.conf.get(k, None) for k in keys}
-    try:
-        for k, v in keys.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+@pytest.fixture
+def branch(spark, monkeypatch, tmp_path):
+    """``branch(name)`` routes shared_pass down one of BRANCHES."""
+    sc = spark.sparkContext
+    local_master, real_dir = sc.master, sc.getCheckpointDir
+
+    def use(name: str) -> None:
+        monkeypatch.setattr(
+            sc, "master", local_master if name == "local" else "spark://x:7077")
+        if name == "checkpoint":
+            sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        monkeypatch.setattr(
+            sc, "getCheckpointDir",
+            (lambda: None) if name == "replicated" else real_dir)
+
+    return use
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_shared_pass_reliable_checkpoints_with_lineage_cut(spark, tmp_path):
+def _grouped(spark):
+    return spark.range(100).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    ).groupBy((F.col("id") % 10).alias("k")).agg(F.sum("v").alias("s"))
+
+
+def test_shared_pass_reliable_checkpoints_with_lineage_cut(spark, branch, tmp_path):
     from team_02_spark.util import shared_pass
 
-    ckpt = str(tmp_path / "ckpt")
-    with _conf(spark, spark__team02__reliableSharedPass="true",
-               spark__team02__checkpointDir=ckpt):
-        df = spark.range(100).select(
-            F.col("id"), (F.col("id") * 2).alias("v")
-        ).groupBy((F.col("id") % 10).alias("k")).agg(F.sum("v").alias("s"))
-        out = shared_pass(df, eager=True)
-        # dir provisioned under the conf override, keyed by app id
-        cur = spark.sparkContext.getCheckpointDir()
-        assert cur and ckpt.lstrip("/") in cur
-        assert spark.sparkContext.applicationId in cur
-        # lineage truncated: the plan is a materialized-RDD scan, not
-        # the nested aggregate
-        assert "LogicalRDD" in _plan(out)
-        assert "Aggregate" not in _plan(out)
-        # values survive the round trip
-        assert {(r["k"], r["s"]) for r in out.collect()} == {
-            (r["k"], r["s"]) for r in df.collect()
-        }
+    branch("checkpoint")
+    df = _grouped(spark)
+    out = shared_pass(df, eager=True)
+    # lineage cut: the plan is a materialized-RDD scan, not the aggregate
+    assert "LogicalRDD" in _plan(out)
+    assert "Aggregate" not in _plan(out)
+    # written to the context's checkpoint dir, not to executor blocks
+    ckpt_file = out._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+    assert ckpt_file.isDefined() and str(tmp_path / "ckpt") in ckpt_file.get()
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_shared_pass_reliable_lane_hash_identical(spark, tmp_path):
+def test_shared_pass_replicated_without_checkpoint_dir(spark, branch):
+    """A non-local master with no checkpoint dir gets a localCheckpoint
+    whose blocks are 2x replicated; ``eager`` materializes it now and
+    the lineage is cut either way."""
+    from team_02_spark.util import release_shared, shared_pass
+
+    def registered(rdd) -> bool:
+        return spark._jsc.sc().getPersistentRDDs().contains(rdd.id())
+
+    branch("replicated")
+    df = _grouped(spark)
+    out = shared_pass(df, eager=True)
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    assert registered(rdd)
+    level = rdd.getStorageLevel()
+    assert level.useDisk() and level.replication() == 2
+    assert rdd.isCheckpointed()
+    assert "LogicalRDD" in _plan(out)
+    assert "Aggregate" not in _plan(out)
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+    release_shared(out)
+    assert not registered(rdd)
+
+
+def test_shared_pass_reliable_lane_hash_identical(spark, branch):
     """One full shared-pass lane (q_heaps_law: multi-consumer text
-    aggregate) must return identical rows under the local and the
-    reliable strategy."""
+    aggregate) returns identical rows on every branch."""
     from team_02_spark.queries import QUERIES
 
     fn = QUERIES["q_heaps_law"].fn
-    base = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-    with _conf(spark, spark__team02__reliableSharedPass="true",
-               spark__team02__checkpointDir=str(tmp_path / "ckpt2")):
-        reliable = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-    assert reliable == base
+    rows = {}
+    for name in BRANCHES:
+        branch(name)
+        rows[name] = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
+    assert rows["local"]
+    assert rows["checkpoint"] == rows["local"] == rows["replicated"]
 
 
-def test_shared_pass_persist_fallback_when_dir_unwritable(spark):
-    """Checkpoint-dir provisioning failure (unwritable FS) must
-    degrade to persist(MEMORY_AND_DISK_2) — replicated blocks, job
-    survives a lost block by recompute — never raise."""
-    from team_02_spark.util import shared_pass
-
-    with _conf(spark, spark__team02__reliableSharedPass="true",
-               spark__team02__checkpointDir="/proc/team02_unwritable"):
-        df = spark.range(50).select(F.col("id").alias("k"))
-        out = shared_pass(df)
-        lvl = out.storageLevel
-        assert lvl.useMemory and lvl.useDisk and lvl.replication == 2
-        assert out.count() == 50
-        out.unpersist()
-
-
-def test_shared_pass_persist_fallback_eager_truncates_lineage(spark):
-    """In the degraded persist path, eager (iterative) callers still
-    get a truncated plan — the RDD rebuild — so per-round plans can't
-    nest (r7 advisor medium finding)."""
-    from team_02_spark.util import shared_pass
-
-    with _conf(spark, spark__team02__reliableSharedPass="true",
-               spark__team02__checkpointDir="/proc/team02_unwritable"):
-        df = spark.range(40).groupBy((F.col("id") % 4).alias("k")).count()
-        out = shared_pass(df, eager=True)
-        # truncated = a materialized-RDD scan (since r9 wrapped in the
-        # rebuilt frame's own InMemoryRelation), never the nested agg
-        plan = _plan(out)
-        assert "LogicalRDD" in plan or "ExistingRDD" in plan
-        assert "Aggregate" not in plan
-        assert sorted(map(tuple, out.collect())) == sorted(
-            map(tuple, df.collect())
-        )
-
-
-def test_shared_pass_passes_streaming_frame_through(spark, tmp_path):
+def test_shared_pass_passes_streaming_frame_through(spark, branch, tmp_path):
     """A streaming frame cannot be checkpointed and its sink runs it
-    per micro-batch: shared_pass hands it back unchanged under both
-    strategies instead of raising."""
+    per micro-batch: shared_pass hands it back unchanged on every
+    branch instead of raising."""
     from team_02_spark.util import shared_pass
 
     stream = spark.readStream.schema("id long, tweet string").json(
         str(tmp_path))
-    for mode in ("auto", "true"):
-        with _conf(spark, spark__team02__reliableSharedPass=mode):
-            out = shared_pass(stream)
-        assert out.isStreaming and out.columns == ["id", "tweet"]
+    for name in BRANCHES:
+        branch(name)
+        out = shared_pass(stream)
+        assert out is stream and out.isStreaming
 
 
-def test_connected_components_under_reliable_strategy(spark, tmp_path):
-    """The iterative caller end to end on the reliable branch: a
-    two-component graph converges, labels are min-ids, and the loop's
-    release of each previous round's frame never poisons the result."""
+def test_connected_components_under_reliable_strategy(spark, branch):
+    """The iterative caller end to end on every branch: a two-component
+    graph converges to min-id labels, and the loop's release of each
+    previous round's frame never poisons the result."""
     from team_02_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)], ["a", "b"]
     )
-    with _conf(spark, spark__team02__reliableSharedPass="true",
-               spark__team02__checkpointDir=str(tmp_path / "ckpt3")):
+    for name in BRANCHES:
+        branch(name)
         got = {
             (r["node"], r["comp"])
             for r in connected_components(pairs).collect()
         }
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1),
-                   (10, 10), (11, 10), (12, 10)}
+        assert got == {(1, 1), (2, 1), (3, 1), (4, 1),
+                       (10, 10), (11, 10), (12, 10)}, name
 
 
-# ----------------------- r9: checkpoint-dir cluster-visibility guard
-# r8 advisor medium: in auto mode on a non-local master, fs.defaultFS
-# is file:/// on clusters without HDFS (standalone / k8s+s3) and
-# setCheckpointDir accepts a local path with only a warning — each
-# executor then checkpoints to ITS OWN disk and cross-executor reads
-# fail. The guard rejects local-scheme dirs when require_shared, so
-# shared_pass degrades to the replicated-persist fallback instead.
-
-
-def test_shared_scheme_classifier():
-    from team_02_spark.util import _shared_scheme
-
-    assert not _shared_scheme(None)
-    assert not _shared_scheme("")
-    assert not _shared_scheme("/tmp/ckpt")            # scheme-less: local
-    assert not _shared_scheme("file:///tmp/ckpt")
-    assert _shared_scheme("hdfs://nn:8020/tmp/ckpt")
-    assert _shared_scheme("s3a://bucket/ckpt")
-    assert _shared_scheme("abfss://c@acct.dfs.core.windows.net/ckpt")
-
-
-def test_ensure_checkpoint_dir_require_shared_rejects_local(spark):
-    """On this box every resolvable dir (explicit conf, existing sc
-    dir, fs.defaultFS=file:///) is local-scheme, so require_shared
-    must refuse ALL of them — the caller then takes the replicated-
-    persist fallback, never a broken executor-local checkpoint."""
-    from team_02_spark.util import _ensure_checkpoint_dir
-
-    # explicit local-scheme conf
-    with _conf(spark, spark__team02__checkpointDir="/tmp/team02_local_ck"):
-        assert _ensure_checkpoint_dir(spark, require_shared=True) is False
-    # no conf: falls through to existing sc dir or file:/// defaultFS
-    assert _ensure_checkpoint_dir(spark, require_shared=True) is False
-    # sanity: without the guard the same resolution still succeeds
-    assert _ensure_checkpoint_dir(spark, require_shared=False) is True
-
-
-def test_shared_pass_persist_fallback_releases_source_blocks(spark):
-    """r8 advisor low: the eager persist-fallback path must hand back
-    a frame that IS persisted (so release_shared works) and must not
-    leak the intermediate source blocks for the life of the app."""
-    from team_02_spark.util import release_shared, shared_pass
+def test_connected_components_releases_each_round(spark):
+    """Each round's labels are released once the next round is
+    materialized: after the loop only the returned labels stay
+    registered. ``DataFrame.unpersist`` alone frees nothing for a
+    checkpointed frame, which left one RDD per round behind."""
+    from team_02_spark.operators.dedup import connected_components
 
     def n_persisted() -> int:
         return spark._jsc.sc().getPersistentRDDs().size()
 
+    chain = spark.range(64).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
     before = n_persisted()
-    with _conf(spark, spark__team02__reliableSharedPass="true",
-               spark__team02__checkpointDir="/proc/team02_unwritable"):
-        df = spark.range(60).groupBy((F.col("id") % 6).alias("k")).count()
-        out = shared_pass(df, eager=True)
-        lvl = out.storageLevel
-        assert lvl.useMemory and lvl.useDisk and lvl.replication == 2
-        # exactly the rebuilt frame's blocks remain registered; the
-        # source persist was released inside shared_pass
-        assert n_persisted() == before + 1
-        assert out.count() == 6
-        release_shared(out)
-    assert n_persisted() == before
+    labels = connected_components(chain)
+    assert n_persisted() <= before + 1
+    assert {r["comp"] for r in labels.collect()} == {0}
 
 
 def test_knn_lsh_partial_topk_bounds_rank_window(spark):
