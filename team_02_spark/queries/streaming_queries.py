@@ -488,8 +488,9 @@ def q_cdc_stream(spark, sf_dir):
     change feed (op from each customer's order count, new balance =
     exact order-total cents) lands as THREE parquet micro-batches,
     `streaming.cdc.cdc_upsert_stream` folds them through foreachBatch
-    idempotent upserts into the customer snapshot, and the pointer'd
-    final state is returned. The oracle is the ONE-SHOT SQL fold —
+    idempotent upserts into the customer snapshot, and the newest
+    committed version (the one commit rule of `streaming.cdc`) is
+    returned. The oracle is the ONE-SHOT SQL fold —
     valid precisely because micro-batch boundaries provably cannot
     change the result (replacement semantics; fuzzed under arbitrary
     batchings in tests/test_property_fuzz_r7.py). Replays are safe by
@@ -540,10 +541,11 @@ def q_cdc_stream_bucketed(spark, sf_dir):
     batch, and the bucketed output hands batch N+1 the same layout —
     per-batch cost O(batch + one snapshot pass), never a snapshot
     re-shuffle (a plain full-outer merge re-shuffles the entire
-    snapshot per batch; it cannot broadcast). Versioned tables double
-    as the pointer (catalog listing, monotone batch ids), so there is
-    no pointer-flip crash window. Hash-checked against the one-shot
-    SQL fold — identical to the plain lane's oracle by design."""
+    snapshot per batch; it cannot broadcast). The state is the newest
+    version table in the catalog — the parquet path's commit rule, with
+    the catalog listing standing in for the ``_SUCCESS`` markers.
+    Hash-checked against the one-shot SQL fold — identical to the plain
+    lane's oracle by design."""
     import hashlib
 
     from team_02_spark.streaming.cdc import (

@@ -46,33 +46,19 @@ def stream_foreach_batch(df: DataFrame, batch_fn, checkpoint: str, *,
 
 
 def materialized_aggregate(stream_df, agg_fn, snapshot_path: str,
-                           checkpoint: str, key: str):
-    """Streaming materialized view: per micro-batch, aggregate the
-    batch and MERGE it into a parquet snapshot (operators/upsert) —
-    the incremental-refresh pattern for dashboards over streams.
+                           checkpoint: str):
+    """Streaming materialized view: per micro-batch, write
+    ``agg_fn(batch_df)`` over the parquet snapshot — the
+    incremental-refresh pattern for dashboards over streams.
 
-    ``agg_fn(batch_df) -> DataFrame`` must emit one row per ``key``.
-    Complete-mode output feeds the merge, so the snapshot converges to
-    the same result as a batch aggregation over all data seen.
+    The stream runs in complete mode, so every micro-batch already is
+    the full aggregate over all data seen: one overwrite per batch is
+    the whole refresh, and the snapshot converges to the batch
+    aggregation. A replayed batch rewrites the same result.
     """
-    import os
 
-    from team_02_spark.operators.upsert import upsert
-
-    def refresh(_batch_df, _batch_id):
-        spark = _batch_df.sparkSession
-        aggregated = agg_fn(_batch_df)
-        if os.path.exists(snapshot_path):
-            base = spark.read.parquet(snapshot_path)
-            merged = upsert(base, aggregated, key)
-        else:
-            merged = aggregated
-        # write via temp + atomic-ish swap (overwrite) — local-mode
-        # stand-in for a transactional table format commit
-        merged.write.mode("overwrite").parquet(snapshot_path + ".tmp")
-        final = spark.read.parquet(snapshot_path + ".tmp")
-        final.write.mode("overwrite").parquet(snapshot_path)
-        return None
+    def refresh(batch_df, _batch_id):
+        agg_fn(batch_df).write.mode("overwrite").parquet(snapshot_path)
 
     return (
         stream_df.writeStream.outputMode("complete")

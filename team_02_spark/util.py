@@ -69,16 +69,21 @@ def shared_pass(df: DataFrame, *, eager: bool = False) -> DataFrame:
 
 
 def release_shared(df: DataFrame) -> None:
-    """Free the blocks of a shared-pass frame a caller no longer needs
-    (iterative loops: the previous round's labels). ``unpersist`` only
-    drops cache-manager entries, so this unpersists the checkpointed
-    RDD behind the frame's ``LogicalRDD``; any other frame is left
-    alone. Reliable ``checkpoint`` files stay in the checkpoint dir:
-    Spark deletes them only under
-    ``spark.cleaner.referenceTracking.cleanCheckpoints``."""
+    """Free what a shared-pass frame holds once a caller no longer
+    needs it (iterative loops: the previous round's labels).
+    ``unpersist`` only drops cache-manager entries, so this unpersists
+    the checkpointed RDD behind the frame's ``LogicalRDD`` and deletes
+    its reliable ``checkpoint`` files, which Spark itself deletes only
+    under ``spark.cleaner.referenceTracking.cleanCheckpoints``. Any
+    other frame is left alone."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+        rdd = plan.rdd()
+        rdd.unpersist(False)
+        ckpt = rdd.getCheckpointFile()
+        if ckpt.isDefined():
+            fs, path, _ = hadoop_fs(df.sparkSession, ckpt.get())
+            fs.delete(path, True)
 
 
 def hadoop_fs(spark, path: str):

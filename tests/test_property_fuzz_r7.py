@@ -170,12 +170,16 @@ def _brute_cdc(base, ops):
 
 
 @_SETTINGS
-@given(ops=OPS, cut=st.integers(min_value=0, max_value=24))
-def test_cdc_apply_matches_brute_fold_any_batching(spark, tmp_path_factory, ops, cut):
+@given(ops=OPS, cut=st.integers(min_value=0, max_value=24),
+       replay=st.booleans())
+def test_cdc_apply_matches_brute_fold_any_batching(spark, tmp_path_factory,
+                                                   ops, cut, replay):
     """apply_cdc_batch over ANY op sequence split at ANY point into
     two micro-batches equals the sequential python fold — the
     batching boundary can never change the final snapshot (the
-    property that makes micro-batch sizing a pure throughput knob)."""
+    property that makes micro-batch sizing a pure throughput knob).
+    ``replay`` re-applies the last batch under its same batch_id, the
+    foreachBatch at-least-once retry, which must change nothing."""
     from team_02_spark.streaming.cdc import (
         apply_cdc_batch,
         latest_state,
@@ -193,12 +197,18 @@ def test_cdc_apply_matches_brute_fold_any_batching(spark, tmp_path_factory, ops,
     )
     cut = min(cut, len(seq_ops))
     schema = "seq long, k int, val int, op string"
+    applied = []
     for bid, chunk in enumerate([seq_ops[:cut], seq_ops[cut:]]):
         if not chunk:
             continue
         batch = spark.createDataFrame(
             [(s, k, v, op) for (s, k, op, v) in chunk], schema
         )
+        apply_cdc_batch(batch, bid, state_dir=state_dir, key="k",
+                        seq_col="seq")
+        applied.append((batch, bid))
+    if replay:
+        batch, bid = applied[-1]
         apply_cdc_batch(batch, bid, state_dir=state_dir, key="k",
                         seq_col="seq")
     got = {r["k"]: r["val"] for r in latest_state(spark, state_dir).collect()}

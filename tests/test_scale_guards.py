@@ -613,10 +613,12 @@ def test_shared_pass_passes_streaming_frame_through(spark, branch, tmp_path):
         assert out is stream and out.isStreaming
 
 
-def test_connected_components_under_reliable_strategy(spark, branch):
+def test_connected_components_under_reliable_strategy(spark, branch, tmp_path):
     """The iterative caller end to end on every branch: a two-component
     graph converges to min-id labels, and the loop's release of each
-    previous round's frame never poisons the result."""
+    previous round's frame never poisons the result. On the checkpoint
+    branch the release also deletes each earlier round's checkpoint
+    files: only the returned labels' ``rdd-*`` dir remains."""
     from team_02_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -624,12 +626,15 @@ def test_connected_components_under_reliable_strategy(spark, branch):
     )
     for name in BRANCHES:
         branch(name)
-        got = {
-            (r["node"], r["comp"])
-            for r in connected_components(pairs).collect()
-        }
+        labels = connected_components(pairs)
+        got = {(r["node"], r["comp"]) for r in labels.collect()}
         assert got == {(1, 1), (2, 1), (3, 1), (4, 1),
                        (10, 10), (11, 10), (12, 10)}, name
+        if name == "checkpoint":
+            ckpt = labels._jdf.queryExecution().analyzed().rdd() \
+                .getCheckpointFile().get()
+            left = [p.name for p in (tmp_path / "ckpt").glob("*/rdd-*")]
+            assert left == [ckpt.rsplit("/", 1)[-1]]
 
 
 def test_connected_components_releases_each_round(spark):

@@ -5,6 +5,9 @@ batch run. Also covers watermark wiring and stateful stream dedup.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from team_02_spark.sources import load_table
@@ -162,7 +165,7 @@ def test_materialized_aggregate_converges(spark, tmp_path):
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("v"),
         ).select("event_type", "n", "v"),
         lambda b: b,  # stream side already aggregated (complete mode)
-        snap, str(tmp_path / "ckpt"), "event_type",
+        snap, str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     got = {r["event_type"]: (r["n"], round(r["v"], 4)) for r in
@@ -170,6 +173,8 @@ def test_materialized_aggregate_converges(spark, tmp_path):
     want = {r["event_type"]: (r["n"], round(r["v"], 4)) for r in
             agg(load_table(spark, SF_SMOKE, "events")).collect()}
     assert got == want
+    # one overwrite per batch: no second-write scratch copy is left
+    assert not (tmp_path / "snapshot.tmp").exists()
 
 
 def test_watermark_late_data_determinism(spark, tmp_path):
@@ -652,189 +657,6 @@ def test_upsert_bucketed_is_shuffle_free_and_exact(spark, tmp_path):
     reap_bucketed_tables(spark, prefix="b8_")
 
 
-def test_cdc_pointer_crash_recovery(spark, tmp_path):
-    """r8 advisor medium: _advance_pointer's delete->rename pair is
-    not atomic as a unit — a crash in the gap leaves version dirs but
-    no _LATEST. latest_state must recover to the max committed
-    version (versions are monotone; a version dir is fully written
-    before its pointer flip starts) and heal the pointer, NEVER fold
-    into an empty base."""
-    from team_02_spark.streaming.cdc import (
-        apply_cdc_batch,
-        latest_state,
-        seed_state,
-    )
-
-    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
-    state = str(tmp_path / "state_crash")
-    seed_state(base, state)
-    batch0 = spark.read.schema(schema).parquet(feed_dir + "/batch_0.parquet")
-    apply_cdc_batch(batch0, 0, state_dir=state, key="k", seq_col="seq")
-    committed = sorted(map(tuple, latest_state(spark, state).collect()))
-
-    # simulate the crash window: pointer gone, versions intact
-    import os
-
-    os.remove(os.path.join(state, "_LATEST"))
-    recovered = latest_state(spark, state)
-    assert recovered is not None, "empty-base fold on a populated state_dir"
-    assert sorted(map(tuple, recovered.collect())) == committed
-    # pointer healed: subsequent reads go through the fast path again
-    assert os.path.exists(os.path.join(state, "_LATEST"))
-    with open(os.path.join(state, "_LATEST")) as fh:
-        assert fh.read().strip() == "v000000000000"
-
-
-def test_cdc_pointer_recovery_prefers_numbered_over_seed(spark, tmp_path):
-    """v_seed sorts lexicographically AFTER v{digits} ('_' > '0'), so
-    recovery must pick by version semantics (numbered max, else seed),
-    not by raw string order."""
-    from team_02_spark.streaming.cdc import _recover_version, seed_state
-    from team_02_spark.streaming.cdc import apply_cdc_batch
-
-    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
-    state = str(tmp_path / "state_order")
-    seed_state(base, state)
-    assert _recover_version(spark, state) == "v_seed"
-    batch0 = spark.read.schema(schema).parquet(feed_dir + "/batch_0.parquet")
-    apply_cdc_batch(batch0, 7, state_dir=state, key="k", seq_col="seq")
-    assert _recover_version(spark, state) == "v000000000007"
-
-
-def test_cdc_heal_never_moves_pointer_backward(spark, tmp_path):
-    """r9 advisor medium: a reader that entered the flip gap, recovered
-    vN, then stalled while the writer committed vN+1 must NOT drag the
-    pointer back to vN when it finally heals — later batches would fold
-    into the stale base and silently drop the newer changes. The heal
-    yields to any pointer >= its version and returns the newer one."""
-    import os
-
-    from team_02_spark.streaming.cdc import (
-        _advance_pointer,
-        apply_cdc_batch,
-        latest_state,
-        seed_state,
-    )
-
-    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
-    state = str(tmp_path / "state_monotone")
-    seed_state(base, state)
-    for i in (0, 1):
-        b = spark.read.schema(schema).parquet(feed_dir + f"/batch_{i}.parquet")
-        apply_cdc_batch(b, i, state_dir=state, key="k", seq_col="seq")
-    newest = sorted(map(tuple, latest_state(spark, state).collect()))
-
-    # the stalled reader wakes up and heals with the OLD version
-    got = _advance_pointer(spark, state, "v000000000000", monotone=True)
-    assert got == "v000000000001", "heal did not yield to the newer pointer"
-    with open(os.path.join(state, "_LATEST")) as fh:
-        assert fh.read().strip() == "v000000000001"
-    assert sorted(map(tuple, latest_state(spark, state).collect())) == newest
-    # and the stale tmp payload was cleaned up, not left to be renamed
-    assert not os.path.exists(
-        os.path.join(state, "_LATEST.tmp.v000000000000"))
-    # yielding even against the seed pointer (v_seed > any garbage,
-    # < every numbered version)
-    assert _advance_pointer(spark, state, "v_seed", monotone=True) \
-        == "v000000000001"
-
-
-def test_cdc_version_key_total_order():
-    from team_02_spark.streaming.cdc import _version_key
-
-    assert _version_key(None) < _version_key("v_seed")
-    assert _version_key("garbage") < _version_key("v_seed")
-    assert _version_key("v_seed") < _version_key("v000000000000")
-    assert _version_key("v000000000000") < _version_key("v000000000007")
-    # a torn pointer compares lowest so a heal may overwrite it
-    assert _version_key("") == _version_key(None)
-
-
-def test_cdc_heal_into_gap_still_lands(spark, tmp_path):
-    """The ordinary crash-window heal (pointer truly missing) must
-    still install the recovered version — monotonicity only guards
-    against overwriting a NEWER pointer, not against healing at all."""
-    import os
-
-    from team_02_spark.streaming.cdc import _advance_pointer, seed_state
-
-    base, _, _, _ = _cdc_fixture(spark, tmp_path)
-    state = str(tmp_path / "state_gap")
-    seed_state(base, state)
-    os.remove(os.path.join(state, "_LATEST"))
-    got = _advance_pointer(spark, state, "v_seed", monotone=True)
-    assert got == "v_seed"
-    with open(os.path.join(state, "_LATEST")) as fh:
-        assert fh.read().strip() == "v_seed"
-
-
-def test_cdc_stale_heal_into_gap_re_heals_forward(spark, tmp_path):
-    """r10 advisor low (generalized): a STALLED reader that recovered
-    vN long ago and wakes into a crash gap (pointer missing, vN+1 on
-    disk — the writer died mid-flip) used to land vN in the gap and
-    pin the pointer one version back; later batches would fold into
-    the stale base and silently drop vN+1. The heal now re-scans the
-    version log after landing and re-heals forward to disk-max — on
-    BOTH rename semantics (fail-on-existing and POSIX replace)."""
-    import os
-
-    from team_02_spark.streaming.cdc import (
-        _advance_pointer,
-        apply_cdc_batch,
-        latest_state,
-        seed_state,
-    )
-
-    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
-    state = str(tmp_path / "state_stale_heal")
-    seed_state(base, state)
-    for i in (0, 1):
-        b = spark.read.schema(schema).parquet(feed_dir + f"/batch_{i}.parquet")
-        apply_cdc_batch(b, i, state_dir=state, key="k", seq_col="seq")
-    newest_rows = sorted(map(tuple, latest_state(spark, state).collect()))
-    # the writer dies mid-flip: pointer gone, v0 AND v1 dirs intact
-    os.remove(os.path.join(state, "_LATEST"))
-    # the stalled reader heals with the version it recovered pre-stall
-    got = _advance_pointer(spark, state, "v000000000000", monotone=True)
-    assert got == "v000000000001", "stale heal did not re-heal forward"
-    with open(os.path.join(state, "_LATEST")) as fh:
-        assert fh.read().strip() == "v000000000001"
-    assert sorted(map(tuple, latest_state(spark, state).collect())) \
-        == newest_rows
-    # no stray tmp payloads left behind
-    assert not [f for f in os.listdir(state) if ".tmp." in f]
-
-
-def test_cdc_heal_replaces_strictly_older_pointer(spark, tmp_path):
-    """The delete-and-retry arm: a stale heal that already LANDED an
-    older pointer (the pre-fix end state) is repaired by the next
-    monotone heal — strictly-older pointers are replaced, never
-    yielded to."""
-    import os
-
-    from team_02_spark.streaming.cdc import (
-        _advance_pointer,
-        apply_cdc_batch,
-        seed_state,
-    )
-
-    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
-    state = str(tmp_path / "state_older_ptr")
-    seed_state(base, state)
-    for i in (0, 1):
-        b = spark.read.schema(schema).parquet(feed_dir + f"/batch_{i}.parquet")
-        apply_cdc_batch(b, i, state_dir=state, key="k", seq_col="seq")
-    # simulate the pre-fix damage: pointer pinned one back via the
-    # unguarded writer path (plain open() would orphan the Hadoop
-    # ChecksumFileSystem's .crc sidecar)
-    assert _advance_pointer(spark, state, "v000000000000") \
-        == "v000000000000"
-    got = _advance_pointer(spark, state, "v000000000001", monotone=True)
-    assert got == "v000000000001"
-    with open(os.path.join(state, "_LATEST")) as fh:
-        assert fh.read().strip() == "v000000000001"
-
-
 def test_cdc_latest_state_none_only_when_truly_empty(spark, tmp_path):
     from team_02_spark.streaming.cdc import latest_state
 
@@ -842,6 +664,78 @@ def test_cdc_latest_state_none_only_when_truly_empty(spark, tmp_path):
     empty = tmp_path / "state_empty"
     empty.mkdir()
     assert latest_state(spark, str(empty)) is None
+
+
+def _cdc_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _cdc_apply_all(spark, state, feed_dir, schema, batch_ids):
+    from team_02_spark.streaming.cdc import apply_cdc_batch
+
+    for i in batch_ids:
+        b = spark.read.schema(schema).parquet(feed_dir + f"/batch_{i}.parquet")
+        apply_cdc_batch(b, i, state_dir=state, key="k", seq_col="seq")
+
+
+def test_cdc_uncommitted_version_is_ignored(spark, tmp_path):
+    """A version dir without Spark's _SUCCESS marker (a torn write) is
+    not a version: latest_state skips it, and the next batch folds into
+    the newest COMMITTED version older than its own output."""
+    from team_02_spark.streaming.cdc import latest_state, seed_state
+
+    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
+    state = str(tmp_path / "state_torn")
+    seed_state(base, state)
+    _cdc_apply_all(spark, state, feed_dir, schema, [0])
+    after_0 = _cdc_rows(latest_state(spark, state))
+    _cdc_apply_all(spark, state, feed_dir, schema, [1])
+    os.remove(os.path.join(state, "v000000000002", "_SUCCESS"))
+    assert _cdc_rows(latest_state(spark, state)) == after_0
+
+    _cdc_apply_all(spark, state, feed_dir, schema, [2])
+    # the same fold with batch 1 never applied
+    clean = str(tmp_path / "state_clean")
+    seed_state(base, clean)
+    _cdc_apply_all(spark, clean, feed_dir, schema, [0, 2])
+    assert _cdc_rows(latest_state(spark, state)) \
+        == _cdc_rows(latest_state(spark, clean))
+
+
+def test_cdc_populated_state_without_commit_raises(spark, tmp_path):
+    """Version dirs with none committed are a torn state, not an empty
+    one: reading it or folding a batch into it raises instead of
+    starting over from an empty base."""
+    from team_02_spark.streaming.cdc import (
+        apply_cdc_batch,
+        latest_state,
+        seed_state,
+    )
+
+    base, feed_dir, schema, _ = _cdc_fixture(spark, tmp_path)
+    state = str(tmp_path / "state_uncommitted")
+    seed_state(base, state)
+    os.remove(os.path.join(state, "v000000000000", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="none is committed"):
+        latest_state(spark, state)
+    batch0 = spark.read.schema(schema).parquet(feed_dir + "/batch_0.parquet")
+    with pytest.raises(RuntimeError, match="none is committed"):
+        apply_cdc_batch(batch0, 0, state_dir=state, key="k", seq_col="seq")
+
+
+def test_cdc_keeps_newest_two_versions(spark, tmp_path):
+    """After each commit the parquet state keeps the head and the
+    replay base only: three batches leave exactly v2 and v3."""
+    from team_02_spark.streaming.cdc import latest_state, seed_state
+
+    base, feed_dir, schema, expected = _cdc_fixture(spark, tmp_path)
+    state = str(tmp_path / "state_retention")
+    seed_state(base, state)
+    _cdc_apply_all(spark, state, feed_dir, schema, [0, 1, 2])
+    assert sorted(d for d in os.listdir(state) if d.startswith("v")) \
+        == ["v000000000002", "v000000000003"]
+    assert {(r["k"], r["name"], r["val"])
+            for r in latest_state(spark, state).collect()} == expected
 
 
 def test_upsert_bucketed_rejects_in_place_and_drops_scratch(spark):
@@ -905,7 +799,7 @@ def test_cdc_stream_bucketed_state_across_batches(spark, tmp_path):
         assert "Exchange" not in plan, (
             f"micro-batch {i} merge re-shuffled the snapshot:\n{plan}"
         )
-    # version pruning: only the newest keep_versions=2 tables remain
+    # version pruning: only the newest 2 tables remain
     from team_02_spark.streaming.cdc import _bucketed_versions
 
     versions = _bucketed_versions(spark, prefix)
@@ -986,15 +880,3 @@ def test_cdc_bucketed_batch_replay_is_idempotent(spark, tmp_path):
 
     for v in _bucketed_versions(spark, prefix):
         spark.sql(f"DROP TABLE IF EXISTS {v}")
-
-
-def test_cdc_bucketed_rejects_replay_unsafe_retention(spark):
-    import pytest
-
-    from team_02_spark.streaming.cdc import apply_cdc_batch_bucketed
-
-    batch = spark.createDataFrame([(1, 1, "x", 1, "U")],
-                                  "seq long, k int, name string, val int, op string")
-    with pytest.raises(ValueError, match="keep_versions"):
-        apply_cdc_batch_bucketed(batch, 0, state_prefix="b9x_none",
-                                 key="k", seq_col="seq", keep_versions=1)
