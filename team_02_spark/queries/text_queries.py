@@ -240,10 +240,13 @@ _NGRAM_SETS_SQL = """
 # Exact-threshold keep-first dedup over the 3-word-shingle sets — the
 # oracle for BOTH q_dedup_ngram (complete candidate generation, equal
 # by construction) and q_dedup_near (MinHash-LSH candidates + exact
-# Jaccard verify: equal whenever LSH recall is complete, which 8
-# bands x 4 rows gives with P > 0.999 for the >= 0.8-jaccard
-# duplicates the fixtures carry; a miss would surface as a hash
-# mismatch, which is exactly what the check is for).
+# Jaccard verify: equal only when LSH recall is complete). With 8
+# bands x 4 rows a pair at Jaccard J is a candidate with probability
+# 1-(1-J^4)^8: 0.985 at J = 0.8, 0.9973 at 0.85, above 0.999 only from
+# J ~ 0.88. The gate is green because of the fixtures' pair bands, not
+# the S-curve: sf0.01 has no pair in [0.5, 0.9), and sf0.1 has 7 pairs
+# in [0.8, 0.9) and none in [0.5, 0.8). A miss surfaces as a hash
+# mismatch, which is exactly what the check is for.
 _EXACT_DEDUP_ORACLE = f"""
     WITH sets AS ({_NGRAM_SETS_SQL}),
     sizes AS (SELECT doc_id, len(sh) AS sz FROM sets),
@@ -546,8 +549,9 @@ def q_curation_full(spark, sf_dir):
     arithmetic on both engines — no libm, no rounding boundary), the
     exact dedup is min-id-per-md5, and the near-dedup stage shares
     the exact-threshold keep-first semantics of _EXACT_DEDUP_ORACLE,
-    applied to the curated survivor set (LSH recall complete at the
-    fixtures' >=0.8-jaccard duplicates)."""
+    applied to the curated survivor set (equal only at complete LSH
+    recall: P = 0.985 at J = 0.8, > 0.999 only from J ~ 0.88; the
+    fixtures have no pair in [0.5, 0.8), see _EXACT_DEDUP_ORACLE)."""
     from team_02_spark.pipeline_data import curate
 
     docs = t(spark, sf_dir, "documents")

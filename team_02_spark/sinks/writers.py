@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from team_02_spark.util import hadoop_fs, read_text, write_text
+from team_02_spark.util import commit_next_version, hadoop_fs, list_versions
 
 
 def write_csv(df: DataFrame, path: str, *, header: bool = True,
@@ -193,38 +193,35 @@ def write_training_shards(df: DataFrame, out_dir: str, *,
 
 def publish_audited(df: DataFrame, out_dir: str, *,
                     checks: list | None = None) -> str:
-    """Write-Audit-Publish: stage → validate → atomically publish.
+    """Write-Audit-Publish: stage, validate, then commit a new version
+    (the discipline Iceberg's WAP branches formalize, on plain parquet).
 
-    The lake-ops discipline for production table writes (the pattern
-    Iceberg's WAP branches formalize, here on plain parquet dirs):
+    1. WRITE to a hidden ``{out_dir}/.staging-<uuid>`` dir that holds
+       no ``_SUCCESS`` marker;
+    2. AUDIT the staged files (what was WRITTEN, not the plan): a check
+       is ``fn(staged_df) -> falsy | error-string``; a failure raises
+       and keeps the staging dir for post-mortem;
+    3. PUBLISH by the engine's one commit rule for versioned datasets
+       (``util.commit_next_version``): rename staging to the next
+       ``v{n:012d}``, failing if a racing publisher took it, then
+       create ``v{n}/_SUCCESS``. The newest committed version is
+       current; each commit keeps the newest two.
 
-    1. WRITE the frame to a hidden staging snapshot
-       ``{out_dir}/.staging-<uuid>`` — never visible to readers;
-    2. AUDIT: re-read the staged files (validating what was actually
-       WRITTEN, not the in-memory plan) and run every check —
-       a check is ``fn(staged_df) -> falsy | error-string``;
-    3. PUBLISH: one atomic rename to ``{out_dir}/snapshot-<uuid>``
-       plus a ``_CURRENT`` pointer file written via tmp+rename, so a
-       reader either sees the previous snapshot or the new one,
-       never a half-written mix. All of it goes through the Hadoop
-       FileSystem client (hdfs://, s3a://, file:// and plain paths
-       alike). The old pointer is deleted just before the rename, so
-       a reader in that gap gets FileNotFoundError, not partial data.
-
-    A failed audit raises and LEAVES the staging dir for post-mortem;
-    the published history is append-only (old snapshots remain until
-    compaction policy removes them — time travel for free). Returns
-    the published snapshot path. At 100 TB the same protocol runs on
-    object storage with a manifest-file pointer swap instead of a
-    directory rename."""
+    The marker follows the rename so that where a dir rename copies
+    file by file (s3a) no reader takes a half-copied version as
+    committed. That follows from Hadoop's filesystem contract; no test
+    covers it, as the suite has no s3a store. All steps go through the
+    Hadoop FileSystem client. Returns the published version's path."""
     import uuid as _uuid
 
     spark = df.sparkSession
     base = out_dir.rstrip("/")
-    token = _uuid.uuid4().hex
-    staging = f"{base}/.staging-{token}"
-    final = f"{base}/snapshot-{token}"
-    df.write.mode("errorifexists").parquet(staging)
+    staging = f"{base}/.staging-{_uuid.uuid4().hex}"
+    (
+        df.write.mode("errorifexists")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(staging)
+    )
 
     staged = spark.read.parquet(staging)
     for check in checks or []:
@@ -234,26 +231,17 @@ def publish_audited(df: DataFrame, out_dir: str, *,
                 f"publish_audited: audit failed ({problem}); staged "
                 f"snapshot kept at {staging} for inspection"
             )
-
-    fs, jstaging, jvm = hadoop_fs(spark, staging)
-    path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(jstaging, path(final)):
-        raise OSError(f"publish_audited: could not rename {staging} to {final}")
-    tmp_ptr = f"{base}/._CURRENT.{token}.tmp"
-    write_text(spark, tmp_ptr, f"snapshot-{token}\n")
-    ptr = path(f"{base}/_CURRENT")
-    fs.delete(ptr, False)  # HDFS will not rename onto an existing file
-    if not fs.rename(path(tmp_ptr), ptr):
-        raise OSError(f"publish_audited: could not point _CURRENT at {final}")
-    return final
+    return commit_next_version(spark, base, staging)
 
 
 def read_published(spark, out_dir: str) -> DataFrame:
-    """Read whatever snapshot ``_CURRENT`` points at — the reader half
-    of the WAP contract (a concurrent publish renames a complete
-    pointer into place; this reader never sees partial data)."""
+    """Read the newest committed version under ``out_dir`` — the
+    reader half of the WAP contract: an uncommitted version (a
+    publisher that crashed, or is still between its rename and its
+    marker) is skipped, so a reader never sees partial data. Raises
+    FileNotFoundError when no version is committed."""
     base = out_dir.rstrip("/")
-    snap = read_text(spark, f"{base}/_CURRENT")
-    if snap is None:
+    _, committed = list_versions(spark, base)
+    if not committed:
         raise FileNotFoundError(f"no published snapshot under {out_dir}")
-    return spark.read.parquet(f"{base}/{snap}")
+    return spark.read.parquet(f"{base}/{committed[-1]}")

@@ -20,15 +20,13 @@ State layout (plain parquet — no transactional format needed):
     <state_dir>/v000000000000/      the seed snapshot
     <state_dir>/v{batch_id+1:012d}/ snapshot AFTER applying batch_id
 
-One commit rule answers "which version is current?": the newest
-COMMITTED version is the state. A parquet version is committed once it
-holds Spark's ``_SUCCESS`` marker — the file committer writes it last,
-and an overwrite deletes the old dir before rewriting it — so a torn
-write is simply not a version and there is no pointer to flip.
-The zero-padded names make string order version order. Batch N folds
-into the newest committed version older than its own output, so a
-replayed batch never reads what it overwrites; after each commit the
-newest two versions are kept (the head and the replay base).
+The state follows the engine's one commit rule for versioned datasets
+(``util.list_versions``): the newest COMMITTED version is the state.
+Here Spark's file committer writes the commit marker last, and an
+overwrite deletes the old dir before rewriting it, so a torn write is
+simply not a version. Batch N folds into the newest committed version
+older than its own output, so a replayed batch never reads what it
+overwrites; each commit keeps the head and the replay base.
 
 At 100 TB each micro-batch costs one full-outer join of snapshot x
 batch plus a snapshot rewrite. Full outer can't broadcast, so the
@@ -43,20 +41,10 @@ batching/ordering/idempotency logic is unchanged either way.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from team_02_spark.operators.upsert import upsert
-from team_02_spark.util import hadoop_fs
-
-# Versions kept after each commit: the head, and the base a replay of
-# the in-flight batch folds into (foreachBatch replays at most that one).
-_KEEP = 2
-
-
-def _version(n: int) -> str:
-    return f"v{n:012d}"
+from team_02_spark.util import VERSIONS_KEPT, list_versions, prune_versions, version_name
 
 
 def _base_version(committed: list[str], out: str, where: str) -> str:
@@ -72,44 +60,31 @@ def _base_version(committed: list[str], out: str, where: str) -> str:
     return older[-1]
 
 
-def _parquet_versions(spark, state_dir: str) -> tuple[list[str], list[str]]:
-    """``(dirs, committed)`` under ``state_dir``, oldest first: every
-    ``v{n:012d}`` dir, and those holding Spark's ``_SUCCESS`` marker.
-    Listed through the Hadoop FileSystem client: on hdfs:// or s3a://
-    a driver-local ``os.path`` probe would see no state at all. Version
+def _committed(spark, root: str) -> list[str]:
+    """Committed parquet versions under ``root``, oldest first. Version
     dirs with none committed raise rather than read as empty state —
     also what a writer with ``marksuccessfuljobs=false`` leaves."""
-    fs, root, jvm = hadoop_fs(spark, state_dir)
-    if not fs.exists(root):
-        return [], []
-    dirs = sorted(
-        st.getPath().getName() for st in fs.listStatus(root)
-        if st.isDirectory() and re.fullmatch(r"v\d{12}", st.getPath().getName())
-    )
-    committed = [
-        d for d in dirs
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(root, d + "/_SUCCESS"))
-    ]
+    dirs, committed = list_versions(spark, root)
     if dirs and not committed:
         raise RuntimeError(
-            f"CDC state {state_dir!r} holds version dirs {dirs} but none "
-            "is committed (no _SUCCESS marker)"
+            f"CDC state {root!r} holds version dirs {dirs} but none "
+            "is committed (no commit marker)"
         )
-    return dirs, committed
+    return committed
 
 
 def latest_state(spark, state_dir: str) -> DataFrame | None:
     """The newest committed snapshot, or None when ``state_dir`` holds
     no version dirs at all."""
     root = state_dir.rstrip("/")
-    _, committed = _parquet_versions(spark, root)
+    committed = _committed(spark, root)
     return spark.read.parquet(root + "/" + committed[-1]) if committed else None
 
 
 def seed_state(base: DataFrame, state_dir: str) -> None:
     """Install the initial snapshot (the state CDC batches fold into)."""
     base.write.mode("overwrite").parquet(
-        state_dir.rstrip("/") + "/" + _version(0)
+        state_dir.rstrip("/") + "/" + version_name(0)
     )
 
 
@@ -150,20 +125,16 @@ def apply_cdc_batch(batch: DataFrame, batch_id: int, *, state_dir: str,
     spark = batch.sparkSession
     root = state_dir.rstrip("/")
     updates = _collapsed_updates(batch, key, seq_col, op_col)
-    out = _version(batch_id + 1)
-    _, committed = _parquet_versions(spark, root)
-    base = spark.read.parquet(root + "/" + _base_version(committed, out, root))
+    out = version_name(batch_id + 1)
+    base = spark.read.parquet(
+        root + "/" + _base_version(_committed(spark, root), out, root)
+    )
     merged = upsert(
         base, updates, key,
         tombstone_col="__tombstone", broadcast_updates=False,
     )
     merged.write.mode("overwrite").parquet(root + "/" + out)
-    dirs, committed = _parquet_versions(spark, root)
-    keep = committed[-_KEEP:]
-    fs, _, jvm = hadoop_fs(spark, root)
-    for d in dirs:
-        if d < keep[-1] and d not in keep:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(root + "/" + d), True)
+    prune_versions(spark, root)
 
 
 # ------------------------------------------------ bucketed state path
@@ -175,11 +146,9 @@ def apply_cdc_batch(batch: DataFrame, batch_id: int, *, state_dir: str,
 # co-bucketed, the full-outer merge plans ZERO Exchange on the snapshot
 # side, and the merged output is written bucketed again, so batch N+1
 # inherits the layout: the snapshot exchange is paid exactly once, at
-# seed time. Versioning and the commit rule are the parquet path's:
-# table `{prefix}_v000000000000` is the seed, `{prefix}_v{batch_id+1:012d}`
-# the state AFTER batch_id, the newest version table in the catalog is
-# the state, batch N folds into the newest version older than its own
-# output, and the newest two versions are kept.
+# seed time. Versioning and the commit rule are the parquet path's,
+# with tables `{prefix}_v{n:012d}` in place of dirs and the catalog
+# listing in place of commit markers.
 
 
 def _bucketed_versions(spark, prefix: str) -> list[str]:
@@ -202,7 +171,7 @@ def seed_state_bucketed(base: DataFrame, prefix: str, key: str, *,
     — the one full-snapshot exchange this state ever pays."""
     from team_02_spark.operators.scale import write_bucketed
 
-    write_bucketed(base, f"{prefix}_{_version(0)}", key,
+    write_bucketed(base, f"{prefix}_{version_name(0)}", key,
                    num_buckets=num_buckets)
 
 
@@ -219,7 +188,7 @@ def apply_cdc_batch_bucketed(batch: DataFrame, batch_id: int, *,
 
     spark = batch.sparkSession
     updates = _collapsed_updates(batch, key, seq_col, op_col)
-    out = f"{state_prefix}_{_version(batch_id + 1)}"
+    out = f"{state_prefix}_{version_name(batch_id + 1)}"
     base = _base_version(
         _bucketed_versions(spark, state_prefix), out, state_prefix
     )
@@ -227,7 +196,7 @@ def apply_cdc_batch_bucketed(batch: DataFrame, batch_id: int, *,
         spark, base, updates, key, out, num_buckets=num_buckets,
         tombstone_col="__tombstone", plan_sink=plan_sink,
     )
-    for v in _bucketed_versions(spark, state_prefix)[:-_KEEP]:
+    for v in _bucketed_versions(spark, state_prefix)[:-VERSIONS_KEPT]:
         spark.sql(f"DROP TABLE IF EXISTS {v}")
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -91,8 +93,7 @@ def hadoop_fs(spark, path: str):
     FileSystem client — the one filesystem probe that means the same
     thing on hdfs://, s3a://, file:// and plain local paths. A driver-
     local ``os.path`` check returns False for every URI, so a cache
-    never hits, a commit marker is never seen, and a pointer reads as
-    absent on a cluster."""
+    never hits and a commit marker is never seen on a cluster."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(
@@ -100,35 +101,70 @@ def hadoop_fs(spark, path: str):
     ), jpath, jvm
 
 
-
-def read_text(spark, path: str) -> str | None:
-    """The stripped text of a small file (a snapshot pointer) read
-    through :func:`hadoop_fs`, or None when it does not exist."""
-    fs, jpath, _ = hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        out = bytearray()
-        b = stream.read()
-        while b != -1 and len(out) < 4096:
-            out.append(b)
-            b = stream.read()
-        return bytes(out).decode("utf-8").strip()
-    finally:
-        stream.close()
+# One commit rule for every versioned dataset (CDC state, write-audit-
+# publish tables): a version is a ``v{n:012d}`` dir under the dataset
+# root, committed once it holds ``_SUCCESS``; the newest committed one
+# is current, and each commit keeps the newest VERSIONS_KEPT committed
+# ones: the head, and the one a CDC replay folds into or a reader that
+# listed just before the commit still reads. No pointer to flip.
+VERSIONS_KEPT = 2
 
 
-def write_text(spark, path: str, text: str) -> None:
-    """Create (or overwrite) ``path`` holding ``text`` through
-    :func:`hadoop_fs`. Not atomic: pointer writers write a temp file
-    with this and rename it into place."""
-    fs, jpath, _ = hadoop_fs(spark, path)
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
+def version_name(n: int) -> str:
+    return f"v{n:012d}"
+
+
+def list_versions(spark, root: str) -> tuple[list[str], list[str]]:
+    """``(dirs, committed)`` under ``root``, oldest first. Uncommitted
+    dirs never raise here: what they mean is the caller's rule."""
+    fs, jroot, jvm = hadoop_fs(spark, root)
+    if not fs.exists(jroot):
+        return [], []
+    dirs = sorted(
+        st.getPath().getName() for st in fs.listStatus(jroot)
+        if st.isDirectory() and re.fullmatch(r"v\d{12}", st.getPath().getName())
+    )
+    committed = [
+        d for d in dirs
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(jroot, d + "/_SUCCESS"))
+    ]
+    return dirs, committed
+
+
+def prune_versions(spark, root: str) -> None:
+    """Delete every version dir older than the head that is not among
+    the newest VERSIONS_KEPT committed ones; newer dirs may be in flight."""
+    dirs, committed = list_versions(spark, root)
+    keep = committed[-VERSIONS_KEPT:]
+    fs, jroot, jvm = hadoop_fs(spark, root)
+    for d in dirs:
+        if d < keep[-1] and d not in keep:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(jroot, d), True)
+
+
+def commit_next_version(spark, root: str, staging: str) -> str:
+    """Rename the fully written, marker-free dir ``staging`` to the
+    next version of ``root``, commit it, prune, and return its path.
+    ``n`` is one past the largest version dir, committed or not, so a
+    crashed publish is never reused. The rename refuses an existing
+    target (``FileContext``, ``Rename.NONE``): ``FileSystem.rename``
+    onto an existing dir nests the source inside it, silently losing a
+    racing publisher. HDFS checks and renames in one NameNode step; a
+    local filesystem checks just before renaming."""
+    dirs, _ = list_versions(spark, root)
+    final = f"{root}/{version_name(int(dirs[-1][1:]) + 1 if dirs else 0)}"
+    fs, dst, jvm = hadoop_fs(spark, final)
+    hfs = jvm.org.apache.hadoop.fs
+    no_overwrite = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+    no_overwrite[0] = hfs.Options.Rename.NONE
+    dst = fs.makeQualified(dst)
+    hfs.FileContext.getFileContext(dst.toUri(), fs.getConf()).rename(
+        fs.makeQualified(hfs.Path(staging)), dst, no_overwrite
+    )
+    fs.create(hfs.Path(dst, "_SUCCESS"), False).close()
+    prune_versions(spark, root)
+    return final
+
 
 def knuth_uniform(key):
     """Deterministic uniform draw in (0,1) from an integer id column —

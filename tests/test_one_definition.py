@@ -81,3 +81,43 @@ def test_one_custom_conf_and_one_checkpoint_site():
                 callers.add(f"{rel}:{node.lineno}")
     assert confs == {"spark.team02.sharedPassInlineExplain"}, sorted(confs)
     assert not callers, f"checkpoint calls outside util.shared_pass: {sorted(callers)}"
+
+
+def test_one_module_knows_the_version_commit_rule():
+    """Every versioned dataset (CDC state, write-audit-publish tables)
+    commits by one rule, so its parts live in ``util.py`` alone: the
+    ``_SUCCESS`` marker, the ``v\\d{12}`` version pattern and its
+    ``012d`` name format, and the Hadoop rename that publishes a
+    version. Docstrings may describe the rule; code may not restate it.
+    No ``_CURRENT`` or ``_LATEST`` pointer name is left anywhere."""
+    where: dict[str, set[str]] = defaultdict(set)
+    pointers = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        docstrings = {
+            id(node.body[0].value) for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                 ast.AsyncFunctionDef))
+            and ast.get_docstring(node, clean=False) is not None
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if re.search(r"(?<![A-Za-z0-9])_(CURRENT|LATEST)\b", node.value):
+                    pointers.add(rel)
+                if id(node) in docstrings:
+                    continue
+                for part, needle in (("_SUCCESS", "_SUCCESS"),
+                                     ("version pattern", r"v\d{12}")):
+                    if needle in node.value:
+                        where[part].add(rel)
+                if node.value == "012d":
+                    where["version name"].add(rel)
+            elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                    and node.func.attr == "rename" \
+                    and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "os"):
+                where["rename"].add(rel)
+    expected = {part: {"util.py"} for part in
+                ("_SUCCESS", "version pattern", "version name", "rename")}
+    assert dict(where) == expected, dict(where)
+    assert not pointers, f"pointer names left in: {sorted(pointers)}"

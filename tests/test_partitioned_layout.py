@@ -121,8 +121,20 @@ def test_bucketed_join_avoids_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS t_bkt_r")
 
 
+def _committed_versions(local_dir) -> list[str]:
+    import os
+    import re
+
+    return sorted(
+        e for e in os.listdir(local_dir)
+        if re.fullmatch(r"v\d{12}", e)
+        and os.path.exists(os.path.join(local_dir, e, "_SUCCESS"))
+    )
+
+
 def _check_wap_protocol(spark, out: str, local_dir) -> None:
     import os
+    import re
 
     import pytest
 
@@ -134,7 +146,7 @@ def _check_wap_protocol(spark, out: str, local_dir) -> None:
         checks=[lambda d: None if d.count() == 10 else "bad count"],
     )
     assert read_published(spark, out).count() == 10
-    assert snap1.rsplit("/", 1)[-1].startswith("snapshot-")
+    assert re.fullmatch(r"v\d{12}", snap1.rsplit("/", 1)[-1])
 
     bad = spark.range(3).withColumnRenamed("id", "k")
     with pytest.raises(ValueError, match="audit failed"):
@@ -146,30 +158,101 @@ def _check_wap_protocol(spark, out: str, local_dir) -> None:
     assert read_published(spark, out).count() == 10
     entries = os.listdir(local_dir)
     assert any(e.startswith(".staging-") for e in entries)
-    # a second good publish supersedes the first (append-only history)
+    # a second good publish supersedes the first
     publish_audited(good.limit(7), out, checks=[])
     assert read_published(spark, out).count() == 7
-    assert sum(1 for e in entries if e.startswith("snapshot-")) == 1
-    assert sum(1 for e in os.listdir(local_dir) if e.startswith("snapshot-")) == 2
+    assert sum(1 for e in entries if re.fullmatch(r"v\d{12}", e)) == 1
+    assert len(_committed_versions(local_dir)) == 2
+    # a third keeps only the newest two committed versions
+    publish_audited(good.limit(4), out, checks=[])
+    assert read_published(spark, out).count() == 4
+    assert _committed_versions(local_dir) == ["v000000000001", "v000000000002"]
 
 
 def test_publish_audited_wap_protocol(spark, tmp_path):
-    """Write-Audit-Publish: a passing audit publishes atomically and
-    flips _CURRENT; a FAILING audit raises, keeps the staging dir for
+    """Write-Audit-Publish: a passing audit commits a new ``v{n}``
+    version; a FAILING audit raises, keeps the staging dir for
     post-mortem, and leaves the previously-published snapshot as what
-    readers see — no partial state ever visible."""
+    readers see — no partial state ever visible. Each commit keeps the
+    newest two committed versions."""
     _check_wap_protocol(spark, str(tmp_path / "table"), tmp_path / "table")
 
 
 def test_publish_audited_wap_protocol_uri_out_dir(spark, tmp_path, monkeypatch):
     """The same protocol on a ``file://`` out_dir: staging, rename and
-    pointer go through the Hadoop FileSystem client, so nothing lands
-    in a cwd-relative ``./file:`` directory."""
+    commit marker go through the Hadoop FileSystem client, so nothing
+    lands in a cwd-relative ``./file:`` directory."""
     import os
 
     monkeypatch.chdir(tmp_path)
     _check_wap_protocol(spark, (tmp_path / "table").as_uri(), tmp_path / "table")
     assert not os.path.exists(tmp_path / "file:")
+
+
+def _check_refuses_existing_version(spark, out: str, local_dir, monkeypatch) -> None:
+    import os
+
+    import pytest
+
+    import team_02_spark.util as util
+    from team_02_spark.sinks.writers import publish_audited, read_published
+
+    good = spark.range(10).withColumnRenamed("id", "k")
+    publish_audited(good, out)
+    raced = local_dir / "v000000000001"
+    listed = util.list_versions
+
+    def concurrent_publisher(*args):
+        # this publisher has listed and picked v1; the other one takes
+        # v1 before this one's rename
+        got = listed(*args)
+        raced.mkdir(exist_ok=True)
+        return got
+
+    with monkeypatch.context() as m:
+        m.setattr(util, "list_versions", concurrent_publisher)
+        with pytest.raises(Exception, match="FileAlreadyExistsException"):
+            publish_audited(good.limit(3), out)
+    assert os.listdir(raced) == []
+    assert read_published(spark, out).count() == 10
+
+
+def test_publish_audited_refuses_existing_version(spark, tmp_path, monkeypatch):
+    """Two publishers can pick the same next version. The second rename
+    must fail, never move its staging dir INSIDE the other's version
+    (what a plain ``FileSystem.rename`` onto an existing dir does),
+    on a plain path and on a ``file://`` out_dir alike."""
+    for name, out in (("plain", str(tmp_path / "plain")),
+                      ("uri", (tmp_path / "uri").as_uri())):
+        _check_refuses_existing_version(spark, out, tmp_path / name, monkeypatch)
+
+
+def test_publish_audited_skips_uncommitted_version(spark, tmp_path):
+    """A ``v{n}`` dir without ``_SUCCESS`` is a publisher that crashed
+    between its rename and its marker: readers skip it, the next
+    publish takes ``n+1`` rather than reusing ``n``, and a crashed
+    FIRST publish blocks nothing."""
+    import os
+
+    import pytest
+
+    from team_02_spark.sinks.writers import publish_audited, read_published
+
+    out = tmp_path / "table"
+    good = spark.range(10).withColumnRenamed("id", "k")
+    crashed = publish_audited(good, str(out))
+    os.remove(os.path.join(crashed, "_SUCCESS"))
+    with pytest.raises(FileNotFoundError):
+        read_published(spark, str(out))
+    publish_audited(good.limit(7), str(out))
+    assert read_published(spark, str(out)).count() == 7
+
+    crashed = publish_audited(good.limit(5), str(out))
+    os.remove(os.path.join(crashed, "_SUCCESS"))
+    assert read_published(spark, str(out)).count() == 7
+    assert publish_audited(good.limit(4), str(out)).endswith("v000000000003")
+    assert read_published(spark, str(out)).count() == 4
+    assert _committed_versions(out) == ["v000000000001", "v000000000003"]
 
 
 def test_file_provenance_multi_file_layout(spark, tmp_path):
