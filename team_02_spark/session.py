@@ -39,6 +39,21 @@ _DEFAULTS = {
     # Read timestamps at the precision parquet declares.
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
     "spark.sql.ui.enabled": "false",
+    # Generated-class cache sized to the engine's working set, so a
+    # warm pass reuses its whole-stage-codegen classes instead of
+    # recompiling them (and the JIT re-compiling their bytecode).
+    # Spark's default of 100 entries is below the working set of every
+    # workload measured (4 cores, SCALING.md "Generated-class cache
+    # working set"): a perfbench llm_sql_ingest pass (8 keys) compiles
+    # ~160 classes and, at 100 entries, recompiled 156 of them on every
+    # warm pass; the 51 headline keys at sf0.01 compile ~1 060 and
+    # recompiled 1 387 on a second round. Rule: about 4x the largest
+    # measured working set. A generated class averages 2.6 KB of
+    # bytecode (max 21 KB), so 4096 retained classes cost at most tens
+    # of MB of metaspace. Static conf; the cache key is the exact
+    # generated source, so a hit runs the same class and cannot change
+    # an answer.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
@@ -62,3 +77,14 @@ def get_spark(app_name: str = "team_02_spark", master: str | None = None,
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Whole-stage-codegen classes compiled so far in this session's JVM.
+
+    Janino compiles a class only on a generated-class cache miss, so the
+    growth of this count over a warm run is the codegen that run paid
+    again.
+    """
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

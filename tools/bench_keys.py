@@ -8,6 +8,10 @@ Usage:
     python tools/bench_keys.py q_triangles q_semdedup [--sf sf0.1]
         [--runs 3] [--explain plans/r15 --tag before]
 
+Each timed key prints its samples and the whole-stage-codegen classes
+each run compiled (`compiles=[...]`); a warm repeat that compiles is
+paying codegen again.
+
 --explain DIR writes DIR/<key>_<tag>.txt with explain("formatted")
 for each key (the judge-checkable plan evidence for this round).
 """
@@ -43,6 +47,7 @@ def main() -> int:
 
     sf_dir = os.path.join("/root/testdata", sf)
     from team_02_spark import get_spark
+    from team_02_spark.session import codegen_compilations
     from team_02_spark.queries import QUERIES
     from team_02_spark.sources import TABLES, load_table
 
@@ -98,15 +103,17 @@ def main() -> int:
             print(f"{name}: explained", flush=True)
             continue
         spark.sparkContext.setJobDescription(f"bench_keys:{name}")
-        samples = []
+        samples, compiles = [], []
         for _ in range(runs):
+            c0 = codegen_compilations(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
+            compiles.append(codegen_compilations(spark) - c0)
         spark.sparkContext.setJobDescription(None)
         results[name] = samples
-        print(f"{name}: best={min(samples):.3f}  samples={samples}",
-              flush=True)
+        print(f"{name}: best={min(samples):.3f}  samples={samples}  "
+              f"compiles={compiles}", flush=True)
     if results:
         total = sum(min(s) for s in results.values())
         print(f"TOTAL(best): {total:.3f}s over {len(results)} keys")
